@@ -1468,8 +1468,8 @@ def decontaminate_bloom(docs: DataFrame, eval_docs: DataFrame,
     8-grams ≈ GBs of strings, but only ~120 MB of 1%-fpp bloom bitmap).
 
     Reuses the crawl tier's seen-filter machinery end to end
-    (``operators/seen.py``: distributed partial build, type-preserving
-    broadcast, per-worker memoized deserialization): eval grams hash to
+    (``operators/seen.py``: distributed partial build, blob broadcast,
+    per-worker memoized deserialization): eval grams hash to
     int64 via the portable ``h32``, the filter routes each training gram
     instance to definitely-clean (bloom miss — the filter PROVES the gram
     is not in the eval set) or maybe-contaminated; only the maybe band

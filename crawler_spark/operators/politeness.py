@@ -147,9 +147,13 @@ def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
     and a stale entry only costs a few waves of either per-salt rounding
     (cold host still salted) or single-task ranking (new-hot host not yet
     salted), never a budget violation beyond the documented n_salts-1.
+    It is deduplicated here: a repeated host would duplicate its frontier
+    rows through the join.
     """
     if hot_hosts is None:
         hot_hosts = hot_host_list(frontier_df, hot_host_threshold)
+    else:
+        hot_hosts = hot_hosts.select("host").distinct()
     df = frontier_df.join(
         F.broadcast(hot_hosts.withColumn("__hot", F.lit(True))), "host", "left"
     )

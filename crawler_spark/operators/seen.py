@@ -9,11 +9,14 @@ local presence as "already crawled" (FileCollector.fs:5-25).  Here:
 
 Both checks are LEFT ANTI joins — the exact-correctness backstop.  At
 10^10-URL scale an anti-join of every wave against the full seen table is the
-dominant shuffle, so we put a **partitioned Bloom prefilter** in front: build
-one bloom per seen-table partition (numpy bitmap inside mapInPandas, OR-merged
-on the driver), broadcast the merged filter, and drop the guaranteed-unseen
-rows cheaply before the exact anti-join runs on the survivors.  False
-positives only cost a row entering the exact join; never correctness.
+dominant shuffle, so one **partitioned Bloom prefilter** (:class:`ShardedBloom`)
+can sit in front: partial bitmaps built per partition (numpy inside
+mapInPandas, OR-merged on the driver), the merged filter broadcast, and the
+guaranteed-unseen rows dropped cheaply before the exact anti-join runs on the
+survivors.  False positives only cost a row entering the exact join; never
+correctness.  Whether the filter exists at all is the crawl's decision, not
+the caller's: ``CrawlJob`` builds it only once |seen| reaches its
+``PREFILTER_MIN_SEEN`` gate (below it the exact anti-join is cheaper).
 """
 
 from __future__ import annotations
@@ -39,92 +42,53 @@ def filter_not_missing(frontier_df: DataFrame, missing_df: DataFrame,
     return frontier_df.join(missing_df.select(key).distinct(), key, "left_anti")
 
 
-class BloomFilter:
-    """Plain double-hashing Bloom over int64 keys, numpy-backed.
+class ShardedBloom:
+    """The URL-seen Bloom filter: double hashing over int64 keys, numpy
+    bitmap split into ``n_shards`` disjoint shards, keys routed by
+    ``key mod n_shards`` (the north rule's "partitioned" seen set).
 
-    Built per-partition and OR-merged; serialized as bytes for broadcast.
+    Memory math: 10^10 keys at 1% fpp need ~9.6 bits/key ≈ **12 GB** of
+    bitmap.  Because shard(key) is a pure function of the key, each shard
+    can live co-partitioned with the url_hash range that probes it instead
+    of every executor holding the whole bitmap; at the scales the crawl
+    runs at, the merged filter ships as one broadcast.
+
+    New filters use :attr:`N_SHARDS` shards; a persisted blob carries its
+    own shard count in the header.  Serialization is a fixed int64 header +
+    the raw bitmap, so the merged filter persists as a single blob.
     """
 
-    def __init__(self, n_bits: int, n_hashes: int, bits: np.ndarray | None = None):
-        self.n_bits = n_bits
-        self.n_hashes = n_hashes
-        self.bits = bits if bits is not None else np.zeros(n_bits // 8 + 1, dtype=np.uint8)
-        # running count of keys folded in (upper bound on distinct keys) —
-        # the cost gate that decides prefilter-vs-exact reads this, so it is
-        # carried through merge() and the serialized blob header
-        self.n_items = 0
-
-    @classmethod
-    def sized(cls, expected_items: int, fpp: float = 0.01) -> "BloomFilter":
-        n = max(expected_items, 1)
-        n_bits = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
-        n_hashes = max(1, int(round(n_bits / n * math.log(2))))
-        return cls(n_bits, n_hashes)
-
-    def _positions(self, keys: np.ndarray) -> np.ndarray:
-        # double hashing h1 + i*h2 over the already-64-bit xxhash64 keys
-        k = keys.astype(np.uint64)
-        h1 = k * np.uint64(0x9E3779B97F4A7C15)
-        h2 = (k >> np.uint64(17)) | np.uint64(1)
-        i = np.arange(self.n_hashes, dtype=np.uint64)[:, None]
-        return ((h1 + i * h2) % np.uint64(self.n_bits)).astype(np.int64)
-
-    def add_many(self, keys: np.ndarray) -> None:
-        pos = self._positions(keys).ravel()
-        np.bitwise_or.at(self.bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        self.n_items += len(keys)
-
-    def might_contain(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        pos = self._positions(keys)
-        hit = (self.bits[pos >> 3] >> (pos & 7)) & 1
-        return hit.all(axis=0).astype(bool)
-
-    def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.n_bits == other.n_bits and self.n_hashes == other.n_hashes
-        out = BloomFilter(self.n_bits, self.n_hashes, self.bits | other.bits)
-        out.n_items = self.n_items + other.n_items
-        return out
-
-
-class ShardedBloom(BloomFilter):
-    """Bloom filter partitioned into ``n_shards`` disjoint bitmap shards,
-    keys routed by ``key mod n_shards``.
-
-    Same probabilistic guarantees as :class:`BloomFilter`; the shard
-    structure is the 10^10-key scale path.  Memory math: 10^10 keys at 1%
-    fpp need ~9.6 bits/key ≈ **12 GB** of bitmap — undistributable as one
-    driver-held broadcast.  Sharded into 256 pieces that is 256 × ~47 MB
-    filters; because shard(key) is a pure function of the key, each
-    executor task only ever consults the shards of the url_hash range it
-    holds, so the shards can live co-partitioned with the frontier (join on
-    shard id) instead of every executor holding all 12 GB.  At sandbox
-    scale the merged filter still fits in one broadcast; the shard routing
-    is identical either way.
-
-    Serialization is a fixed int64 header + the raw bitmap, so per-wave
-    partials and the running merged filter persist as single blobs.
-    """
-
+    N_SHARDS = 32
+    FPP = 0.01
     _MAGIC = 0x53_42_4C_4D  # "SBLM"
 
     def __init__(self, n_shards: int, shard_bits: int, n_hashes: int,
                  bits: np.ndarray | None = None):
         self.n_shards = n_shards
         self.shard_bits = shard_bits
-        n_bits = n_shards * shard_bits
-        super().__init__(n_bits, n_hashes, bits)
+        self.n_bits = n_shards * shard_bits
+        self.n_hashes = n_hashes
+        self.bits = (
+            bits if bits is not None
+            else np.zeros(self.n_bits // 8 + 1, dtype=np.uint8)
+        )
+        # running count of keys folded in (upper bound on distinct keys);
+        # carried through the serialized blob header
+        self.n_items = 0
 
     @classmethod
-    def sized(cls, expected_items: int, fpp: float = 0.01,
-              n_shards: int = 32) -> "ShardedBloom":
-        base = BloomFilter.sized(max(expected_items, 1), fpp)
-        shard_bits = -(-base.n_bits // n_shards)  # ceil
-        shard_bits += (-shard_bits) % 8  # byte-align each shard so a shard's
-        # bitmap is a clean byte slice — lets the executor-routed variant
-        # ship ONE shard per partition instead of the whole filter
-        return cls(n_shards, shard_bits, base.n_hashes)
+    def sized(cls, expected_items: int, fpp: float = FPP) -> "ShardedBloom":
+        n = max(expected_items, 1)
+        n_bits = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
+        n_hashes = max(1, int(round(n_bits / n * math.log(2))))
+        shard_bits = -(-n_bits // cls.N_SHARDS)  # ceil
+        shard_bits += (-shard_bits) % 8  # byte-align each shard's bitmap
+        return cls(cls.N_SHARDS, shard_bits, n_hashes)
+
+    def capacity(self) -> int:
+        """Keys this bitmap holds at :attr:`FPP` — the inverse of
+        :meth:`sized` for a filter sized at the default fpp."""
+        return round(self.n_bits * math.log(2) ** 2 / -math.log(self.FPP))
 
     def empty_like(self) -> "ShardedBloom":
         return ShardedBloom(self.n_shards, self.shard_bits, self.n_hashes)
@@ -139,6 +103,18 @@ class ShardedBloom(BloomFilter):
             np.int64
         )
 
+    def add_many(self, keys: np.ndarray) -> None:
+        pos = self._positions(keys).ravel()
+        np.bitwise_or.at(self.bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+        self.n_items += len(keys)
+
+    def might_contain(self, keys: np.ndarray) -> np.ndarray:
+        if len(keys) == 0:
+            return np.zeros(0, dtype=bool)
+        pos = self._positions(keys)
+        hit = (self.bits[pos >> 3] >> (pos & 7)) & 1
+        return hit.all(axis=0).astype(bool)
+
     def to_bytes(self) -> bytes:
         header = np.array(
             [self._MAGIC, self.n_shards, self.shard_bits, self.n_hashes,
@@ -149,57 +125,29 @@ class ShardedBloom(BloomFilter):
 
     @classmethod
     def from_bytes(cls, raw: bytes) -> "ShardedBloom":
+        """Inverse of :meth:`to_bytes`; raises ValueError on any other blob."""
         header = np.frombuffer(raw[:40], dtype=np.int64)
-        assert header[0] == cls._MAGIC, "not a ShardedBloom blob"
+        if len(header) < 5 or header[0] != cls._MAGIC:
+            raise ValueError("not a ShardedBloom blob")
         bf = cls(int(header[1]), int(header[2]), int(header[3]))
         bits = np.frombuffer(raw[40:], dtype=np.uint8)
-        assert len(bits) == len(bf.bits), "bitmap size mismatch"
+        if len(bits) != len(bf.bits):
+            raise ValueError("ShardedBloom bitmap size mismatch")
         bf.bits = bits.copy()
         bf.n_items = int(header[4])
         return bf
 
-    # -- per-shard access (executor-routed variant) -------------------------
-    def shard_blob(self, shard: int) -> bytes:
-        """The shard's bitmap as a standalone byte slice (requires the
-        byte-aligned layout that :meth:`sized` produces)."""
-        assert self.shard_bits % 8 == 0, "shard bitmaps must be byte-aligned"
-        b = self.shard_bits // 8
-        return self.bits[shard * b:(shard + 1) * b].tobytes()
 
-    @staticmethod
-    def shard_might_contain(blob: bytes, shard_bits: int, n_hashes: int,
-                            keys: np.ndarray) -> np.ndarray:
-        """Membership test against ONE shard's bitmap using shard-local bit
-        positions — exactly the positions :meth:`_positions` computes minus
-        the shard base, so routed and broadcast variants agree bit-for-bit."""
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        bits = np.frombuffer(blob, dtype=np.uint8)
-        k = keys.astype(np.uint64)
-        h1 = k * np.uint64(0x9E3779B97F4A7C15)
-        h2 = (k >> np.uint64(17)) | np.uint64(1)
-        i = np.arange(n_hashes, dtype=np.uint64)[:, None]
-        pos = ((h1 + i * h2) % np.uint64(shard_bits)).astype(np.int64)
-        hit = (bits[pos >> 3] >> (pos & 7)) & 1
-        return hit.all(axis=0).astype(bool)
-
-
-def build_bloom_into(df: DataFrame, proto: BloomFilter,
-                     key: str = "url_hash") -> BloomFilter:
-    """Distributed partial build with FIXED filter parameters: one partial
-    filter per partition via mapInPandas, OR-merged on the driver (partial
-    bytes move, never rows).  Used both for one-shot full builds and for the
-    per-wave *incremental* partials that keep the seen-bloom up to date
-    without ever rescanning the seen table."""
-    is_sharded = isinstance(proto, ShardedBloom)
-    params = (
-        (proto.n_shards, proto.shard_bits, proto.n_hashes)
-        if is_sharded
-        else (proto.n_bits, proto.n_hashes)
-    )
+def build_bloom_into(df: DataFrame, proto: ShardedBloom,
+                     key: str = "url_hash") -> ShardedBloom:
+    """Distributed build with FIXED filter parameters: one partial filter
+    per partition via mapInPandas, OR-merged on the driver (partial bytes
+    move, never rows).  Used for full builds and for folds too large to
+    bring to the driver."""
+    params = (proto.n_shards, proto.shard_bits, proto.n_hashes)
 
     def partial(batches):
-        bf = ShardedBloom(*params) if is_sharded else BloomFilter(*params)
+        bf = ShardedBloom(*params)
         for pdf in batches:
             bf.add_many(pdf[key].to_numpy(dtype=np.int64, na_value=0))
         yield pd.DataFrame({"bits": [bf.bits.tobytes()],
@@ -208,284 +156,21 @@ def build_bloom_into(df: DataFrame, proto: BloomFilter,
     partials = df.select(key).mapInPandas(
         partial, "bits binary, n_items long"
     ).collect()
-    merged = ShardedBloom(*params) if is_sharded else BloomFilter(*params)
+    merged = ShardedBloom(*params)
     for row in partials:
         merged.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
         merged.n_items += row["n_items"]
     return merged
 
 
-class CuckooFilter:
-    """Cuckoo filter over int64 keys — the deletion-capable alternative to
-    :class:`ShardedBloom` (north_rule: "bloom/cuckoo URL-seen set").
-
-    Standard 2-choice construction: 16-bit fingerprints, 4 slots/bucket,
-    bucket₂ = bucket₁ XOR h(fingerprint), insert-with-eviction.  Unlike a
-    bloom it supports ``delete_many`` — which is exactly what the cache
-    re-validation sweep wants: a healed card's key can be REMOVED so the
-    prefilter stays precise, where the bloom permanently accumulates stale
-    keys (correct either way — stale keys only cost exact-join traffic).
-
-    Lookup is fully vectorized (two gathers + compares per key batch);
-    insert/delete run a per-key Python loop, acceptable because the engine
-    only ever inserts ONE politeness-bounded wave at a time, never a whole
-    table.  At 10^10 keys the same shard-by-key-mod layout as ShardedBloom
-    applies (each executor holds/serves its key range's filter); 16-bit
-    fingerprints at load ≤0.84 give ~2^-13 fpp per probe.
-    """
-
-    _MAGIC = 0x43_4B_46_31  # "CKF1"
-
-    def __init__(self, n_buckets: int, slots: int = 4, max_kicks: int = 500,
-                 table: np.ndarray | None = None):
-        assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
-        self.n_buckets = n_buckets
-        self.slots = slots
-        self.max_kicks = max_kicks
-        self.table = (
-            table if table is not None
-            else np.zeros((n_buckets, slots), dtype=np.uint16)
-        )
-        self.n_items = 0  # fingerprints currently stored (cost-gate input)
-
-    @classmethod
-    def sized(cls, expected_items: int, load: float = 0.84) -> "CuckooFilter":
-        need = max(int(expected_items / (4 * load)), 1)
-        n_buckets = 1 << (need - 1).bit_length()
-        return cls(n_buckets)
-
-    # -- hashing ------------------------------------------------------------
-    def _fp(self, keys: np.ndarray) -> np.ndarray:
-        k = keys.astype(np.uint64)
-        fp = ((k * np.uint64(0xFF51AFD7ED558CCD)) >> np.uint64(48)).astype(np.uint16)
-        fp[fp == 0] = 1  # 0 marks an empty slot
-        return fp
-
-    def _i1(self, keys: np.ndarray) -> np.ndarray:
-        k = keys.astype(np.uint64)
-        return ((k * np.uint64(0x9E3779B97F4A7C15)) >> np.uint64(17)).astype(
-            np.int64
-        ) & (self.n_buckets - 1)
-
-    def _i2(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        h = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(
-            self.n_buckets - 1
-        )
-        return (i1.astype(np.uint64) ^ h).astype(np.int64)
-
-    # -- ops ----------------------------------------------------------------
-    def _present(self, buckets: np.ndarray, fps: np.ndarray) -> np.ndarray:
-        """Column-unrolled ``fp in table[bucket]`` for a key batch."""
-        rows = self.table[buckets]
-        out = np.zeros(len(fps), dtype=bool)
-        for j in range(self.slots):
-            out |= rows[:, j] == fps
-        return out
-
-    def _bulk_place(self, fps: np.ndarray, buckets: np.ndarray) -> np.ndarray:
-        """Scatter each fingerprint into an empty slot of its bucket, giving
-        colliding same-bucket keys distinct slots via within-bucket ranks.
-        Returns the boolean placed mask.  Pure numpy — no per-key Python."""
-        if len(fps) == 0:
-            return np.zeros(0, dtype=bool)
-        rows = self.table[buckets]                      # gather (copy)
-        # column-wise over the (tiny) slot axis: axis-1 reductions on
-        # millions of 4-wide rows pay per-row setup cost; column ops don't
-        empty_cols = [rows[:, j] == 0 for j in range(self.slots)]
-        n_empty = np.zeros(len(fps), dtype=np.int64)
-        for c in empty_cols:
-            n_empty += c
-        # rank of each key among the batch keys that share its bucket
-        order = np.argsort(buckets, kind="stable")
-        sb = buckets[order]
-        group_start = np.zeros(len(sb), dtype=np.int64)
-        new_group = np.flatnonzero(sb[1:] != sb[:-1]) + 1
-        group_start[new_group] = new_group
-        np.maximum.accumulate(group_start, out=group_start)
-        rank = np.empty(len(sb), dtype=np.int64)
-        rank[order] = np.arange(len(sb)) - group_start
-        placed = rank < n_empty
-        if placed.any():
-            # the (rank+1)-th empty slot of the bucket, column-unrolled
-            target = rank + 1
-            slot = np.full(len(fps), -1, dtype=np.int64)
-            cum = np.zeros(len(fps), dtype=np.int64)
-            for j, c in enumerate(empty_cols):
-                cum += c
-                hit = placed & (slot < 0) & c & (cum == target)
-                slot[hit] = j
-            self.table[buckets[placed], slot[placed]] = fps[placed]
-        return placed
-
-    def insert_many(self, keys: np.ndarray) -> int:
-        """Insert; returns the number of keys DROPPED (table too full —
-        callers size the filter so this stays 0; a dropped key is a false
-        negative, so the caller must fall back to exact joins if nonzero).
-
-        Bulk path: dedupe on (bucket₁, fingerprint) — the entry identity, so
-        re-inserting a key is idempotent — then vectorized presence check and
-        two rounds of first-empty-slot scatter (bucket₁ then bucket₂).  Only
-        keys whose both buckets are full fall through to the per-key
-        eviction loop, which is empty below the design load factor."""
-        import random
-
-        keys = np.asarray(keys, dtype=np.int64)
-        if len(keys) == 0:
-            return 0
-        fps, i1s = self._fp(keys), self._i1(keys)
-        i2s = self._i2(i1s, fps)
-        # entry identity = (unordered {i1,i2}, fp): i2 = i1 ^ h(fp), so the
-        # same entry has exactly two ordered representations — canonicalize
-        # with min(i1,i2) and keep the first occurrence only (idempotence)
-        _, first = np.unique(
-            np.minimum(i1s, i2s).astype(np.uint64) * np.uint64(1 << 16) + fps,
-            return_index=True,
-        )
-        first = np.sort(first)
-        fps, i1s, i2s = fps[first], i1s[first], i2s[first]
-        # presence first (idempotence — no duplicate fingerprints)
-        todo = ~(self._present(i1s, fps) | self._present(i2s, fps))
-        placed1 = np.zeros(len(fps), dtype=bool)
-        placed1[todo] = self._bulk_place(fps[todo], i1s[todo])
-        todo &= ~placed1
-        placed2 = np.zeros(len(fps), dtype=bool)
-        placed2[todo] = self._bulk_place(fps[todo], i2s[todo])
-        todo &= ~placed2
-        self.n_items += int(placed1.sum() + placed2.sum())
-
-        # eviction path (rare: both buckets full)
-        rng = random.Random(0xC0FFEE)
-        dropped = 0
-        for fp, i1 in zip(fps[todo].tolist(), i1s[todo].tolist()):
-            b, cur = i1, fp
-            for _ in range(self.max_kicks):
-                s = rng.randrange(self.slots)
-                cur, self.table[b][s] = int(self.table[b][s]), cur
-                b = int(
-                    self._i2(np.array([b]), np.array([cur], dtype=np.uint16))[0]
-                )
-                row = self.table[b]
-                empty = np.nonzero(row == 0)[0]
-                if len(empty):
-                    row[empty[0]] = cur
-                    cur = None
-                    break
-            if cur is not None:
-                dropped += 1
-            else:
-                self.n_items += 1
-        return dropped
-
-    def _bulk_remove(self, fps: np.ndarray, buckets: np.ndarray) -> np.ndarray:
-        """Zero the slot holding each fingerprint in its bucket (if any);
-        returns the boolean removed mask.  Distinct (bucket, fp) pairs can
-        never target the same slot, so the scatter is collision-free."""
-        if len(fps) == 0:
-            return np.zeros(0, dtype=bool)
-        rows = self.table[buckets]
-        found = np.zeros(len(fps), dtype=bool)
-        slot = np.full(len(fps), -1, dtype=np.int64)
-        for j in range(self.slots):
-            hit = ~found & (rows[:, j] == fps)
-            slot[hit] = j
-            found |= hit
-        if found.any():
-            self.table[buckets[found], slot[found]] = 0
-        return found
-
-    def delete_many(self, keys: np.ndarray) -> int:
-        """Remove one fingerprint copy per key; returns keys not found.
-        Vectorized two-phase zeroing (bucket₁ then bucket₂); duplicate keys
-        in one batch collapse to one removal, the rest count as missing."""
-        keys = np.asarray(keys, dtype=np.int64)
-        if len(keys) == 0:
-            return 0
-        fps, i1s = self._fp(keys), self._i1(keys)
-        i2s = self._i2(i1s, fps)
-        uniq, first = np.unique(
-            np.minimum(i1s, i2s).astype(np.uint64) * np.uint64(1 << 16) + fps,
-            return_index=True,
-        )
-        dup_extra = int(len(keys) - len(uniq))  # extra copies always miss
-        first = np.sort(first)
-        fps, i1s, i2s = fps[first], i1s[first], i2s[first]
-        removed1 = self._bulk_remove(fps, i1s)
-        rest = ~removed1
-        removed2 = np.zeros(len(fps), dtype=bool)
-        if rest.any():
-            removed2[rest] = self._bulk_remove(fps[rest], i2s[rest])
-        n_removed = int(removed1.sum() + removed2.sum())
-        self.n_items = max(0, self.n_items - n_removed)
-        return int(len(fps) - n_removed) + dup_extra
-
-    def might_contain(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        fps, i1s = self._fp(keys), self._i1(keys)
-        i2s = self._i2(i1s, fps)
-        return self._present(i1s, fps) | self._present(i2s, fps)
-
-    # -- serialization ------------------------------------------------------
-    def to_bytes(self) -> bytes:
-        header = np.array(
-            [self._MAGIC, self.n_buckets, self.slots, self.max_kicks,
-             self.n_items],
-            dtype=np.int64,
-        )
-        return header.tobytes() + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "CuckooFilter":
-        header = np.frombuffer(raw[:40], dtype=np.int64)
-        assert header[0] == cls._MAGIC, "not a CuckooFilter blob"
-        cf = cls(int(header[1]), int(header[2]), int(header[3]))
-        cf.table = (
-            np.frombuffer(raw[40:], dtype=np.uint16)
-            .reshape(cf.n_buckets, cf.slots)
-            .copy()
-        )
-        cf.n_items = int(header[4])
-        return cf
-
-
 def build_bloom(seen_df: DataFrame, key: str = "url_hash",
-                expected_items: int | None = None, fpp: float = 0.01) -> BloomFilter:
+                expected_items: int | None = None,
+                fpp: float = 0.01) -> ShardedBloom:
     """One-shot distributed bloom build sized from the input (counts the
-    input when no expected_items given — use :func:`build_bloom_into` with a
-    pre-sized filter for incremental maintenance, which never rescans)."""
+    input when no expected_items given)."""
     if expected_items is None:
         expected_items = seen_df.count() or 1
-    proto = BloomFilter.sized(expected_items, fpp)
-    return build_bloom_into(seen_df, proto, key)
-
-
-def serialize_filter(flt) -> tuple:
-    """Type-preserving wire form for broadcasting a seen-filter to executors.
-
-    The filter's bit/slot layout is part of its identity: reconstructing a
-    ShardedBloom's bitmap as a plain BloomFilter computes DIFFERENT bit
-    positions — silent false negatives.  Self-describing blobs (magic-headed
-    to_bytes) carry the type; the plain BloomFilter ships its two params.
-    """
-    if isinstance(flt, (ShardedBloom, CuckooFilter)):
-        return ("blob", flt.to_bytes())
-    return ("plain", flt.n_bits, flt.n_hashes, flt.bits.tobytes())
-
-
-def deserialize_filter(payload: tuple):
-    if payload[0] == "blob":
-        return filter_from_bytes(payload[1])
-    _, n_bits, n_hashes, raw = payload
-    return BloomFilter(n_bits, n_hashes, np.frombuffer(raw, dtype=np.uint8).copy())
-
-
-def filter_from_bytes(raw: bytes):
-    """Dispatch a magic-headed blob to its filter class."""
-    magic = int(np.frombuffer(raw[:8], dtype=np.int64)[0])
-    for cls in (ShardedBloom, CuckooFilter):
-        if magic == cls._MAGIC:
-            return cls.from_bytes(raw)
-    raise ValueError(f"unknown seen-filter blob magic {magic:#x}")
+    return build_bloom_into(seen_df, ShardedBloom.sized(expected_items, fpp), key)
 
 
 # per-Python-worker memo of deserialized seen-filters keyed by a broadcast
@@ -497,30 +182,26 @@ _FILTER_MEMO: dict = {}
 _FILTER_MEMO_MAX = 4
 
 
-def _memoized_filter(token: str, payload: tuple):
+def _memoized_filter(token: str, raw: bytes) -> ShardedBloom:
     flt = _FILTER_MEMO.get(token)
     if flt is None:
-        flt = deserialize_filter(payload)
+        flt = ShardedBloom.from_bytes(raw)
         if len(_FILTER_MEMO) >= _FILTER_MEMO_MAX:
             _FILTER_MEMO.pop(next(iter(_FILTER_MEMO)))
         _FILTER_MEMO[token] = flt
     return flt
 
 
-def bloom_prefilter_unseen(frontier_df: DataFrame, bloom,
+def bloom_prefilter_unseen(frontier_df: DataFrame, bloom: ShardedBloom,
                            key: str = "url_hash") -> DataFrame:
-    """Drop rows the filter proves unseen... inverted: KEEP rows that are
-    definitely-NOT-seen plus the (≤fpp) maybe-seen band for the exact join.
-
-    Accepts any approximate-membership filter (BloomFilter / ShardedBloom /
-    CuckooFilter).  Returns frontier with ``maybe_seen`` boolean — callers
-    route: ``maybe_seen = false`` → fetch directly (the filter guarantees
-    unseen); ``maybe_seen = true`` → exact anti-join backstop.
+    """Flag each frontier row with ``maybe_seen``: ``false`` → the filter
+    guarantees the key unseen (fetch directly); ``true`` → the (≤fpp)
+    maybe-seen band that the exact anti-join backstop must decide.
     """
     import uuid
 
     spark = frontier_df.sparkSession
-    bc = spark.sparkContext.broadcast(serialize_filter(bloom))
+    bc = spark.sparkContext.broadcast(bloom.to_bytes())
     token = uuid.uuid4().hex  # one filter version per broadcast
 
     from pyspark.sql.functions import pandas_udf
@@ -534,7 +215,7 @@ def bloom_prefilter_unseen(frontier_df: DataFrame, bloom,
 
 
 def filter_unseen_with_bloom(frontier_df: DataFrame, seen_df: DataFrame,
-                             bloom: BloomFilter, key: str = "url_hash",
+                             bloom: ShardedBloom, key: str = "url_hash",
                              persisted_out: list | None = None) -> DataFrame:
     """Scale path: bloom prefilter + exact anti-join only on the maybe band.
 
@@ -550,65 +231,6 @@ def filter_unseen_with_bloom(frontier_df: DataFrame, seen_df: DataFrame,
     wave's actions complete; one-shot callers may rely on LRU eviction.
     """
     flagged = bloom_prefilter_unseen(frontier_df, bloom, key).persist()
-    if persisted_out is not None:
-        persisted_out.append(flagged)
-    definitely_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(seen_df.select(key).distinct(), key, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
-
-def filter_unseen_with_bloom_sharded(frontier_df: DataFrame, seen_df: DataFrame,
-                                     bloom: ShardedBloom, key: str = "url_hash",
-                                     persisted_out: list | None = None) -> DataFrame:
-    """Executor-ROUTED variant of :func:`filter_unseen_with_bloom`: instead
-    of broadcasting the whole merged filter to every executor, each bitmap
-    shard travels only to the tasks holding its key range.
-
-    ``shard(key) = key mod n_shards`` is a pure key function, so the
-    frontier and a tiny (shard, blob) table cogroup on the shard id — a
-    co-partitioned join where each task receives exactly ONE shard blob plus
-    the frontier rows that can only ever probe that shard.  At 10^10 keys
-    this is the difference between every executor holding a ~12 GB filter
-    and each holding its ~47 MB slice (ShardedBloom doc).  Bit positions are
-    identical to the broadcast path (``ShardedBloom.shard_might_contain``),
-    so the two variants agree exactly — equivalence-tested alongside the
-    plain/sharded/cuckoo paths.
-    """
-    assert isinstance(bloom, ShardedBloom) and bloom.shard_bits % 8 == 0
-    # shard routing must equal the filter's own uint64 modulo for NEGATIVE
-    # int64 keys too — true for the low-bit mask iff n_shards is 2^m
-    assert bloom.n_shards & (bloom.n_shards - 1) == 0, "n_shards must be 2^m"
-    spark = frontier_df.sparkSession
-    shards = spark.createDataFrame(
-        [(s, bytearray(bloom.shard_blob(s))) for s in range(bloom.n_shards)],
-        "__shard int, bits binary",
-    )
-    shard_bits, n_hashes = bloom.shard_bits, bloom.n_hashes
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in frontier_df.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left.drop(columns=["__shard"])
-        if len(left) == 0:
-            return left.assign(maybe_seen=pd.Series([], dtype=bool))
-        if len(right) == 0:  # no blob for this shard ⇒ nothing seen there
-            return left.assign(maybe_seen=False)
-        hit = ShardedBloom.shard_might_contain(
-            bytes(right["bits"].iloc[0]), shard_bits, n_hashes,
-            left[key].to_numpy(dtype=np.int64, na_value=0),
-        )
-        return left.assign(maybe_seen=hit)
-
-    shard_col = F.col(key).bitwiseAND(F.lit(bloom.n_shards - 1)).cast("int")
-    flagged = (
-        frontier_df.withColumn("__shard", shard_col)
-        .groupBy("__shard")
-        .cogroup(shards.groupBy("__shard"))
-        .applyInPandas(probe, out_schema)
-        .persist()
-    )
     if persisted_out is not None:
         persisted_out.append(flagged)
     definitely_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")

@@ -5,7 +5,9 @@ SURVEY §3.1) is re-expressed as deterministic fetch-wave micro-batches:
 
 wave k:
   1. pending frontier  ←  snapshot k-1          (frontier table, overwrite)
-  2. drop seen (anti-join ∪ bloom prefilter) and known-missing (C1-C3)
+  2. drop seen and known-missing (C1-C3): exact anti-joins; once |seen|
+     reaches ``PREFILTER_MIN_SEEN`` (and ``use_bloom``), one Bloom filter
+     is built from the seen snapshot and probed in front of the seen join
   3. politeness token-bucket selects ≤budget urls/host (F3); rest deferred
   4. fetch = left join vs `pages` (F1/J3)
   5. cards:  downloaded → parse UDF (P15) → `cards` append;
@@ -40,14 +42,11 @@ from ..operators.politeness import (
     apply_robots, hot_host_list, select_wave, select_wave_salted,
 )
 from ..operators.seen import (
-    CuckooFilter,
     ShardedBloom,
     build_bloom_into,
-    filter_from_bytes,
     filter_not_missing,
     filter_unseen,
     filter_unseen_with_bloom,
-    filter_unseen_with_bloom_sharded,
 )
 from ..sources.frontier import frontier_from_range
 from ..sources.store import SnapshotStore
@@ -66,16 +65,19 @@ PHOTO_SEQ_SLOT = 64
 
 
 class CrawlJob:
+    # seen-filter cost gate: while |seen| (manifest row count) is below
+    # this, the exact anti-join is cheaper than a prefilter pass over the
+    # frontier (measured: at sandbox scale the anti-join won every round),
+    # so no filter exists at all — no fold, no blob
+    PREFILTER_MIN_SEEN = 2_000_000
+
     def __init__(self, spark: SparkSession, store_dir: str, pages_df: DataFrame,
                  wave_seconds: int = 3600, robots_df: DataFrame | None = None,
                  use_bloom: bool = False, salted: bool = True,
-                 prewarm: bool = True, bloom_capacity: int = 2_000_000,
-                 bloom_fpp: float = 0.01, bloom_shards: int = 32,
+                 prewarm: bool = True,
                  faults_df: DataFrame | None = None,
                  retry_delay_unit_ms: int | None = None,
                  retry_max_delay_ms: int | None = None,
-                 seen_filter: str = "bloom",
-                 prefilter_min_seen: int = 2_000_000,
                  pages_bucketed: bool = False,
                  hot_refresh_waves: int = 4,
                  hot_host_threshold: int = 100_000):
@@ -101,9 +103,9 @@ class CrawlJob:
         # hot_refresh_waves waves (a stale entry costs a few waves of
         # per-salt rounding or single-task ranking, never a budget
         # violation beyond the documented n_salts-1 overshoot).
-        # Composition-shift guard: a wave whose frontier size estimate
-        # (previous wave's deferred + enqueued_photos — free from the
-        # wave stats) moved outside [0.5x, 2x] of the size at the last
+        # Composition-shift guard: a wave whose frontier size (the row
+        # count of the previous wave's next-frontier commit — free from
+        # the manifest) moved outside [0.5x, 2x] of the size at the last
         # refresh forces an early refresh — this is exactly the
         # card-wave -> photo-wave transition, where a never-seen host
         # (the photo CDN) can arrive already-hot and would otherwise
@@ -127,26 +129,10 @@ class CrawlJob:
         self._pool_obj = None
         self._last_commit: dict = {}
         self._pending: list = []
-        # incremental seen-filter state: the merged filter (bloom or the
-        # deletion-capable cuckoo variant, north_rule "bloom/cuckoo") and the
-        # seen snapshot id it covers; persisted per wave under seen_bloom/ so
-        # a resumed job reloads it instead of rescanning the seen table
-        # "sharded-routed" = same ShardedBloom state, but the wave
-        # prefilter ROUTES each bitmap shard to the tasks holding its key
-        # range (cogroup) instead of broadcasting the whole filter — the
-        # 10^10-key layout where a full filter no longer fits an executor
-        assert seen_filter in ("bloom", "cuckoo", "sharded-routed")
-        self.seen_filter = seen_filter
-        self._filter_degraded = False  # cuckoo overflow -> exact path only
-        # cost gate: while |seen| is below this, the exact anti-join is
-        # cheaper than paying the prefilter UDF over the whole frontier
-        # (measured: at sandbox scale the anti-join won every round), so the
-        # filter is MAINTAINED each wave (cheap driver-side fold) but only
-        # APPLIED once the seen side is big enough to dominate the anti-join
-        self.prefilter_min_seen = prefilter_min_seen
-        self.bloom_capacity = bloom_capacity
-        self.bloom_fpp = bloom_fpp
-        self.bloom_shards = bloom_shards
+        # incremental seen-filter state (use_bloom, gate open): the merged
+        # filter and the seen snapshot id it covers, persisted as ONE blob
+        # under seen_bloom/ so a resumed job reloads it instead of
+        # rescanning the seen table
         self._bloom: ShardedBloom | None = None
         self._bloom_snap = -1
         self._bloom_dir = self.store.root / "seen_bloom"
@@ -169,66 +155,66 @@ class CrawlJob:
         return self.store.read_or_empty(self.spark, table, schema)
 
     # ------------------------------------------------------------------ bloom
-    def _bloom_blob_path(self, seen_snap: int):
-        return self._bloom_dir / f"merged-{seen_snap}.bin"
+    def _prefilter_gate_open(self, n_seen: int | None) -> bool:
+        """The seen filter exists only behind this gate; a None count
+        (pre-summary manifest) keeps the exact path."""
+        return (self.use_bloom and n_seen is not None
+                and n_seen >= self.PREFILTER_MIN_SEEN)
 
-    def _bloom_sync(self) -> ShardedBloom | None:
+    def _bloom_sync(self) -> ShardedBloom:
         """Bring the in-memory merged seen-bloom up to the latest seen
         snapshot WITHOUT rescanning the seen table.
 
-        Fast path: the filter (persisted per wave as a single blob) already
-        covers the latest snapshot — zero I/O.  Crash/resume path: load the
-        newest blob, then top up from ONLY the snapshot data dirs committed
-        after it (each commit writes exactly one new dir).  A full build
-        happens at most once per store lifetime (legacy store with no blob).
-        Returns None while the seen table is empty (nothing to prefilter).
+        Fast path: the filter already covers the latest snapshot — zero
+        I/O.  Resume path: load the persisted blob, then top up from ONLY
+        the snapshot data dirs committed after it (each commit writes
+        exactly one new dir).  Full build, distributed over the current
+        seen snapshot and sized at twice |seen|: when the gate first opens,
+        when the blob is missing or not a ShardedBloom blob (e.g. a cuckoo
+        blob of an older store), and when ``n_items`` has outgrown the size
+        the filter was built for.
         """
         latest = self.store.latest_snapshot_id("seen")
-        if latest is None:
-            if self._bloom is None:
-                self._bloom = self._filter_new()
-                self._bloom_snap = -1
-            return None
-        if self._filter_degraded:
-            return None
-        if self._bloom is not None and self._bloom_snap >= latest:
-            return self._bloom
         if self._bloom is None:
-            # newest persisted blob ≤ latest, if any
-            best = -1
-            if self._bloom_dir.exists():
-                for p in self._bloom_dir.glob("merged-*.bin"):
-                    try:
-                        sid = int(p.stem.split("-")[1])
-                    except ValueError:
-                        continue
-                    if best < sid <= latest:
-                        best = sid
-            if best >= 0:
-                self._bloom = filter_from_bytes(
-                    self._bloom_blob_path(best).read_bytes()
-                )
-                self._bloom_snap = best
-            else:
-                self._bloom = self._filter_new()
-                self._bloom_snap = -1
-        if self._bloom_snap < latest:
+            self._load_bloom(latest)
+        if self._bloom is not None and self._bloom.n_items > self._bloom.capacity():
+            self._bloom = None
+        if self._bloom is None:
+            seen = self.store.read(self.spark, "seen").select("url_hash")
+            n_seen = self.store.total_rows("seen")
+            if n_seen is None:
+                n_seen = seen.count()
+            self._bloom = ShardedBloom.sized(2 * n_seen)
+            self._filter_add(seen)
+        elif self._bloom_snap < latest:
             dirs = self.store.data_dirs_between("seen", self._bloom_snap, latest)
             if dirs:
-                delta = self.spark.read.parquet(*dirs).select("url_hash")
-                self._filter_add(delta)
-            self._bloom_snap = latest
-            if self._filter_degraded:
-                return None
-            self._persist_bloom()
+                self._filter_add(self.spark.read.parquet(*dirs).select("url_hash"))
+        else:
+            return self._bloom
+        self._bloom_snap = latest
+        self._persist_bloom()
         return self._bloom
 
-    def _filter_new(self):
-        if self.seen_filter == "cuckoo":
-            return CuckooFilter.sized(self.bloom_capacity)
-        return ShardedBloom.sized(
-            self.bloom_capacity, self.bloom_fpp, self.bloom_shards
-        )
+    def _load_bloom(self, latest: int) -> None:
+        """Load the newest persisted blob covering at most ``latest``; a
+        blob of any other format is ignored (the caller rebuilds, and the
+        rebuilt blob's persist removes it)."""
+        best = None
+        for p in self._bloom_dir.glob("merged-*.bin"):
+            try:
+                sid = int(p.stem.split("-")[1])
+            except ValueError:
+                continue
+            if sid <= latest and (best is None or sid > best[0]):
+                best = (sid, p)
+        if best is None:
+            return
+        try:
+            self._bloom = ShardedBloom.from_bytes(best[1].read_bytes())
+        except ValueError:
+            return
+        self._bloom_snap = best[0]
 
     # a wave's keys below this come to the driver as one Arrow batch and
     # fold in-process (milliseconds); above it, the distributed mapInPandas
@@ -238,24 +224,13 @@ class CrawlJob:
     DRIVER_FOLD_MAX_ROWS = 2_000_000
 
     def _filter_add(self, keys_df: DataFrame, n_rows: int | None = None) -> None:
-        """Fold a key DataFrame into the in-memory filter.
+        """Fold a key DataFrame into the in-memory filter: a small, known
+        wave as one driver-side Arrow fetch + vectorized ``add_many``; an
+        unknown or huge input (full build) as distributed mapInPandas
+        partials, OR-merged (bytes move, not rows)."""
+        if n_rows is not None and n_rows <= self.DRIVER_FOLD_MAX_ROWS:
+            import numpy as _np
 
-        Bloom, small/known wave: one driver-side Arrow fetch + vectorized
-        ``add_many``.  Bloom, unknown or huge input (legacy full rebuild):
-        distributed mapInPandas partials, OR-merged (bytes move, not rows).
-        Cuckoo: driver-side vectorized insert — bounded because only
-        politeness-bounded waves are ever added; a cuckoo overflow
-        (capacity undersized) would mean false negatives, so it DEGRADES
-        the job to the exact anti-join path instead (correctness is never
-        at stake).
-        """
-        import numpy as _np
-
-        if isinstance(self._bloom, CuckooFilter):
-            keys = keys_df.toPandas()["url_hash"].to_numpy(_np.int64)
-            if self._bloom.insert_many(keys):
-                self._filter_degraded = True
-        elif n_rows is not None and n_rows <= self.DRIVER_FOLD_MAX_ROWS:
             keys = keys_df.toPandas()["url_hash"].to_numpy(_np.int64)
             self._bloom.add_many(keys)
         else:
@@ -263,28 +238,19 @@ class CrawlJob:
             self._bloom.bits |= partial.bits
             self._bloom.n_items += partial.n_items
 
-    def _bloom_add_wave(self, wave_keys_df: DataFrame, seen_snap: int,
-                        n_rows: int | None = None) -> None:
-        """Fold the freshly committed wave's keys into the merged filter and
-        persist — the only per-wave filter work (the wave, never the table)."""
-        if self._bloom is None:
-            # first wave with anything stored: seen was empty until now, so
-            # the sync path had nothing to load — start a fresh filter
-            self._bloom = self._filter_new()
-            self._bloom_snap = -1
-        self._filter_add(wave_keys_df, n_rows)
-        self._bloom_snap = seen_snap
-        if not self._filter_degraded:
-            self._persist_bloom()
-
     def _persist_bloom(self) -> None:
+        """Write the filter as the store's one blob (atomic, like the
+        manifest), then remove every older blob."""
         import os
 
         self._bloom_dir.mkdir(parents=True, exist_ok=True)
-        path = self._bloom_blob_path(self._bloom_snap)
+        path = self._bloom_dir / f"merged-{self._bloom_snap}.bin"
         tmp = path.with_suffix(".bin.tmp")
         tmp.write_bytes(self._bloom.to_bytes())
-        os.replace(tmp, path)  # atomic, like the manifest
+        os.replace(tmp, path)
+        for p in self._bloom_dir.glob("merged-*.bin"):
+            if p != path:
+                p.unlink()
 
     # ------------------------------------------------------ wave pipelining
     @property
@@ -427,32 +393,16 @@ class CrawlJob:
             missing = self._read("missing", MISSING_SCHEMA)
             frontier = filter_not_missing(frontier, missing)
         wave_persisted: list = []  # prefilter caches to release at wave end
-        if self.store.total_rows("seen") == 0:
+        n_seen = self.store.total_rows("seen")
+        if n_seen == 0:
             pass  # wave 0 (or nothing stored yet): no seen filter at all
-        elif self.use_bloom:
-            seen = self._read("seen", SEEN_SCHEMA)
+        elif self._prefilter_gate_open(n_seen):
             # incremental filter: covers all committed seen snapshots without
             # rescanning the seen table (per-wave folds; the exact anti-join
-            # backstop guarantees correctness).  None ⇒ seen empty or the
-            # cuckoo overflowed (degraded) — either way the exact anti-join
-            # is the safe path (a no-op against an empty seen table).  The
-            # cost gate keeps the exact path while |seen| is small enough
-            # that the anti-join beats a prefilter pass over the frontier.
-            bloom = self._bloom_sync()
-            use_prefilter = (
-                bloom is not None and bloom.n_items >= self.prefilter_min_seen
-            )
-            prefilter_fn = (
-                filter_unseen_with_bloom_sharded
-                if self.seen_filter == "sharded-routed"
-                else filter_unseen_with_bloom
-            )
-            frontier = (
-                prefilter_fn(
-                    frontier, seen, bloom, persisted_out=wave_persisted
-                )
-                if use_prefilter
-                else filter_unseen(frontier, seen)
+            # backstop on the maybe band guarantees correctness)
+            frontier = filter_unseen_with_bloom(
+                frontier, self._read("seen", SEEN_SCHEMA), self._bloom_sync(),
+                persisted_out=wave_persisted,
             )
         else:
             frontier = filter_unseen(
@@ -704,19 +654,26 @@ class CrawlJob:
             return run
 
         def _seen_then_bloom():
-            # seen = successfully STORED resources; the bloom fold chains
-            # onto the commit inside the same thread (it needs the snapshot
-            # id) — this wave's keys only, the seen table is never rescanned
-            # after wave 0, and small waves fold driver-side in milliseconds.
+            # seen = successfully STORED resources; once the gate has opened
+            # (a filter exists) the bloom fold chains onto the commit inside
+            # the same thread (it needs the snapshot id) — this wave's keys
+            # only, and small waves fold driver-side in milliseconds.
             snap = self.store.commit("seen", seen_rows)
-            if self.use_bloom:
-                self._bloom_add_wave(
-                    fetched.where(F.col("fetch_status") == "downloaded").select(
-                        "url_hash"
-                    ),
-                    snap,
+            if self._bloom is not None:
+                self._filter_add(
+                    seen_rows.select("url_hash"),
                     n_rows=int(frow["downloaded"] or 0),
                 )
+                self._bloom_snap = snap
+                self._persist_bloom()
+            return snap
+
+        def _commit_frontier():
+            snap = self.store.commit("frontier", next_frontier, mode="overwrite")
+            # the next wave's frontier size, feeding the hot-host
+            # composition-shift refresh; set on the frontier chain, which
+            # the next wave's head awaits, so it never reads a stale value
+            self._next_n = self.store.total_rows("frontier")
             return snap
 
         fut = {
@@ -734,9 +691,8 @@ class CrawlJob:
                 "tail.host_metrics", steps, "host_metrics", host_metrics),
             "crawl_log": self._submit_commit(
                 "tail.crawl_log", steps, "crawl_log", log),
-            "frontier": self._submit_commit(
-                "tail.next_frontier", steps, "frontier", next_frontier,
-                mode="overwrite"),
+            "frontier": self._submit_chained(
+                "tail.next_frontier", steps, "frontier", _commit_frontier),
             "parsed_ok": self._pool.submit(_timed(
                 "tail.parsed_ok", good_cards.count)),
             "parse_fallbacks": self._pool.submit(_timed(
@@ -781,12 +737,6 @@ class CrawlJob:
             stats["parsed_ok"] = results["parsed_ok"]
             stats["deferred"] = int(prow["n"]) - int(prow["selected"] or 0)
             stats["enqueued_photos"] = results["enqueued_photos"]
-            # next wave's frontier size estimate, feeding the hot-host
-            # composition-shift refresh (benign race under pipelining: a
-            # missed update only delays the refresh to the age trigger)
-            self._next_n = int(stats["deferred"]) + int(
-                stats["enqueued_photos"] or 0
-            )
             import json as _json
 
             return self.spark.createDataFrame(
@@ -855,11 +805,11 @@ class CrawlJob:
         Ordering is load-bearing for the incremental seen-filter: expiry
         drops manifest lines, and a filter blob older than the expiry
         horizon could no longer see those lines' data dirs to top up from —
-        bloom false negatives, i.e. re-crawling seen urls.  So after
-        compacting ``seen`` the filter is REBUILT from the compacted
-        snapshot (one single-dir scan, accurate n_items for the cost gate),
-        persisted, and older blobs are pruned — only then does history
-        expire.  Resume always reads latest, which is never expired.
+        bloom false negatives, i.e. re-crawling seen urls.  So compacting
+        ``seen`` DROPS the filter and its blob before history expires; the
+        next gate-open wave rebuilds it from the compacted snapshot (one
+        single-dir scan, accurate ``n_items``).  Resume always reads
+        latest, which is never expired.
 
         Returns {table: {"compacted_to": id|None, "expired": n,
         "deleted_dirs": n}}.
@@ -867,22 +817,11 @@ class CrawlJob:
         out = {}
         for table in self.store.tables():
             snap = self.store.compact(self.spark, table)
-            if table == "seen" and self.use_bloom and not self._filter_degraded:
-                latest = self.store.latest_snapshot_id("seen")
-                if latest is not None:
-                    df = self.store.read(self.spark, "seen").select("url_hash")
-                    self._bloom = self._filter_new()
-                    self._filter_add(df, n_rows=df.count())
-                    self._bloom_snap = latest
-                    if not self._filter_degraded:
-                        self._persist_bloom()
-                        for p in self._bloom_dir.glob("merged-*.bin"):
-                            try:
-                                sid = int(p.stem.split("-")[1])
-                            except ValueError:
-                                continue
-                            if sid < latest:
-                                p.unlink()
+            if table == "seen" and snap is not None:
+                import shutil
+
+                self._bloom = None
+                shutil.rmtree(self._bloom_dir, ignore_errors=True)
             out[table] = {
                 "compacted_to": snap,
                 **self.store.expire_snapshots(table, keep_last=keep_last),
@@ -971,21 +910,13 @@ class CrawlJob:
         )
         # bring the seen-filter up to date BEFORE the overwrite: it then
         # covers a superset of the healed table without ever re-reading it
-        flt = self._bloom_sync() if self.use_bloom else None
-        self.store.commit("seen", healed_seen, mode="overwrite")
-        if flt is not None and not self._filter_degraded:
-            if isinstance(flt, CuckooFilter):
-                # the deletion-capable variant removes the healed keys so
-                # the prefilter stays precise; a bloom keeps them as stale
-                # false positives (correct either way — the exact anti-join
-                # backstop decides)
-                import numpy as _np
-
-                keys = refetch.select("url_hash").toPandas()["url_hash"].to_numpy(
-                    _np.int64
-                )
-                flt.delete_many(keys)
-            self._bloom_snap = self.store.latest_snapshot_id("seen")
+        # (the healed keys stay in it as stale false positives, which the
+        # exact anti-join backstop re-admits)
+        if self._prefilter_gate_open(self.store.total_rows("seen")):
+            self._bloom_sync()
+        snap = self.store.commit("seen", healed_seen, mode="overwrite")
+        if self._bloom is not None:
+            self._bloom_snap = snap
             self._persist_bloom()
         self.enqueue_frontier(refetch)
         return {"revalidated": n_bad}

@@ -14,7 +14,7 @@ arguments and tests:
   urls dedup on the same key the seen set uses;
 * robots + per-host token-bucket politeness (``operators/politeness``)
   on each wave's frontier, salted-rank variant available for hot hosts;
-* exact anti-join seen semantics (``operators/seen``) — the bloom/cuckoo
+* exact anti-join seen semantics (``operators/seen``) — the Bloom
   prefilter slots in unchanged for 10^10-key frontiers.
 
 Iteration is a bounded driver loop (hop count), the standard Spark shape

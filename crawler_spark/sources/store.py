@@ -159,18 +159,23 @@ class SnapshotStore:
     def read(self, spark: SparkSession, table: str, as_of: int | None = None,
              schema: str | None = None) -> DataFrame | None:
         """Read `table` at snapshot `as_of` (default latest).  Returns None if
-        the table has no snapshots yet (callers supply an empty frame)."""
+        the table has no snapshots yet (callers supply an empty frame).
+
+        With a ``schema`` every snapshot dir is read under it, so a column
+        added after older dirs were written reads back NULL for their rows
+        (without it Spark infers the schema from one arbitrary file)."""
         snaps = self.snapshots(table)
         if as_of is not None:
             snaps = [s for s in snaps if s["snapshot"] <= as_of]
         if not snaps:
             return None
         dirs = [str(self.root / table / d) for d in snaps[-1]["dirs"]]
-        return spark.read.parquet(*dirs)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     def read_or_empty(self, spark: SparkSession, table: str, schema: str,
                       as_of: int | None = None) -> DataFrame:
-        df = self.read(spark, table, as_of=as_of)
+        df = self.read(spark, table, as_of=as_of, schema=schema)
         return df if df is not None else spark.createDataFrame([], schema)
 
     # -- maintenance --------------------------------------------------------

@@ -9,6 +9,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF_TEST_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    # informational only: slow tests run in the default selection
+    config.addinivalue_line(
+        "markers", "slow: long-running sweep (runs by default; not deselected)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from crawler_spark.session import get_spark

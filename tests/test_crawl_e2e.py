@@ -13,7 +13,7 @@ from crawler_spark.operators.fetch import fetch_wave, fib_delays_ms, max_attempt
 from crawler_spark.operators.photos import fanin_photos, fanout_photos, validate_image
 from crawler_spark.operators.politeness import apply_robots, select_wave, select_wave_salted
 from crawler_spark.operators.seen import (
-    BloomFilter,
+    ShardedBloom,
     build_bloom,
     filter_unseen,
     filter_unseen_with_bloom,
@@ -69,7 +69,7 @@ def test_fetch_statuses(spark):
 def test_bloom_no_false_negatives():
     import numpy as np
 
-    bf = BloomFilter.sized(10_000, fpp=0.01)
+    bf = ShardedBloom.sized(10_000, fpp=0.01)
     keys = np.arange(10_000, dtype=np.int64) * 2_654_435_761
     bf.add_many(keys)
     assert bf.might_contain(keys).all()  # zero false negatives, ever
@@ -78,22 +78,13 @@ def test_bloom_no_false_negatives():
     assert fp < 0.05  # fpp in the configured ballpark
 
 
-@pytest.mark.parametrize("kind", ["plain", "sharded", "cuckoo", "routed"])
+@pytest.mark.parametrize("kind", ["plain", "sharded"])
 def test_filter_path_equals_exact_antijoin(spark, kind):
-    """Every filter variant is a prefilter, never a semantics change — the
-    'sharded' case is the regression guard for type-preserving broadcast
-    (a ShardedBloom bitmap reinterpreted as a plain BloomFilter computes
-    different bit positions → silent false negatives); the 'routed' case
-    runs the executor-routed shard-cogroup variant (each task sees only its
-    shard's bitmap slice) against the same exact baseline."""
-    import numpy as np
-
-    from crawler_spark.operators.seen import (
-        CuckooFilter,
-        ShardedBloom,
-        build_bloom_into,
-        filter_unseen_with_bloom_sharded,
-    )
+    """The Bloom is a prefilter, never a semantics change: the one-shot
+    self-sized build ('plain') and a build into a pre-sized filter
+    ('sharded', the incremental crawl path) both equal the exact
+    anti-join."""
+    from crawler_spark.operators.seen import build_bloom_into
 
     frontier = frontier_from_range(spark, 0, 499)
     seen = frontier.where(F.col("num") % 3 == 0).select("url_hash", "id").withColumn(
@@ -102,49 +93,29 @@ def test_filter_path_equals_exact_antijoin(spark, kind):
     exact = {r["id"] for r in filter_unseen(frontier, seen).collect()}
     if kind == "plain":
         flt = build_bloom(seen)
-    elif kind in ("sharded", "routed"):
-        flt = build_bloom_into(
-            seen.select("url_hash"), ShardedBloom.sized(2_000, n_shards=8)
-        )
     else:
-        flt = CuckooFilter.sized(2_000)
-        keys = np.array(
-            [r["url_hash"] for r in seen.select("url_hash").collect()],
-            dtype=np.int64,
-        )
-        assert flt.insert_many(keys) == 0
-    variant = (
-        filter_unseen_with_bloom_sharded if kind == "routed"
-        else filter_unseen_with_bloom
-    )
-    with_flt = {r["id"] for r in variant(frontier, seen, flt).collect()}
+        flt = build_bloom_into(seen.select("url_hash"), ShardedBloom.sized(2_000))
+    with_flt = {
+        r["id"] for r in filter_unseen_with_bloom(frontier, seen, flt).collect()
+    }
     assert with_flt == exact
 
 
-def test_cuckoo_filter_semantics():
-    """Insert → no false negatives; idempotent re-insert; delete removes;
-    serialization round-trips through the magic-dispatched loader."""
+def test_bloom_blob_round_trip_rejects_other_formats():
+    """The blob header carries the shard count; a blob of another filter
+    format (the cuckoo ``CKF1`` magic older stores hold) is refused with a
+    ValueError, never misread as a bitmap."""
     import numpy as np
 
-    from crawler_spark.operators.seen import CuckooFilter, filter_from_bytes
-
-    cf = CuckooFilter.sized(10_000)
-    keys = np.arange(10_000, dtype=np.int64) * 2_654_435_761
-    assert cf.insert_many(keys) == 0
-    assert cf.might_contain(keys).all()          # zero false negatives
-    assert cf.insert_many(keys[:100]) == 0       # idempotent (no dup fps)
-
-    probe = np.arange(50_000, 60_000, dtype=np.int64)
-    assert cf.might_contain(probe).mean() < 0.01  # 16-bit fp → tiny fpp
-
-    cf2 = filter_from_bytes(cf.to_bytes())
-    assert isinstance(cf2, CuckooFilter)
-    assert cf2.might_contain(keys).all()
-
-    # deletion — the capability blooms lack (drives revalidate precision)
-    assert cf.delete_many(keys[:5_000]) == 0
-    assert not cf.might_contain(keys[:5_000]).any()
-    assert cf.might_contain(keys[5_000:]).all()
+    bf = ShardedBloom(8, 64, 3)
+    keys = np.arange(100, dtype=np.int64) * 2_654_435_761
+    bf.add_many(keys)
+    back = ShardedBloom.from_bytes(bf.to_bytes())
+    assert (back.n_shards, back.n_items) == (8, 100)
+    assert back.might_contain(keys).all()
+    cuckoo = np.array([0x43_4B_46_31, 1024, 4, 500, 0], np.int64).tobytes()
+    with pytest.raises(ValueError):
+        ShardedBloom.from_bytes(cuckoo + bytes(8192))
 
 
 # ----------------------------------------------------------------- politeness
@@ -168,6 +139,26 @@ def test_token_bucket_salted_matches_budget_scale(spark):
     assert exact == 20
     # per-salt rounding: within n_salts of the exact budget
     assert abs(salted - exact) <= 4
+
+
+def test_salted_select_dedupes_caller_hot_hosts(spark):
+    """A caller-supplied hot_hosts frame with repeated rows selects exactly
+    what its deduplicated frame selects — no frontier row is duplicated
+    through the hot-host join."""
+    frontier = frontier_from_range(spark, 0, 99)  # 200 urls on pet911.ru
+    hot = [("pet911.ru",)]
+
+    def selected(rows):
+        hot_df = spark.createDataFrame(rows, "host string")
+        return [
+            r["url"] for r in
+            select_wave_salted(frontier, 1200, n_salts=4, hot_hosts=hot_df)
+            .where("selected").collect()
+        ]
+
+    once, repeated = selected(hot), selected(hot * 3)
+    assert sorted(repeated) == sorted(once)
+    assert len(repeated) == len(set(repeated))
 
 
 def test_robots_anti_join(spark):
@@ -440,14 +431,15 @@ def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory):
 
 def test_e2e_incremental_bloom(crawl_result, spark, sf_dir, tmp_path_factory,
                                monkeypatch):
-    """C1-scale: the seen-bloom is maintained incrementally — one per-wave
-    fold over that wave's keys only (driver-side Arrow fold for bounded
-    waves, distributed partials for rebuilds), never a rescan of the seen
-    table — persisted per snapshot, reloadable after a restart, and
-    semantically identical to the exact-anti-join run.  prefilter_min_seen=0
-    keeps the bloom-routed wave path itself exercised end-to-end."""
+    """C1-scale: the seen-bloom is built once when the gate opens (the
+    distributed build over the seen snapshot), then maintained
+    incrementally — one per-wave fold over that wave's keys only, never a
+    rescan of the seen table — persisted as one blob, reloadable after a
+    restart, and semantically identical to the exact-anti-join run.  The
+    gate at 0 keeps the bloom prefilter wave path exercised end-to-end."""
     import crawler_spark.plans.crawl_job as cj
 
+    monkeypatch.setattr(cj.CrawlJob, "PREFILTER_MIN_SEEN", 0)
     calls: list[int] = []
     real = cj.CrawlJob._filter_add
 
@@ -461,38 +453,49 @@ def test_e2e_incremental_bloom(crawl_result, spark, sf_dir, tmp_path_factory,
     pages = ref_job.pages
     store = str(tmp_path_factory.mktemp("bloomstore"))
     job = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                   prewarm=False, prefilter_min_seen=0)
+                   prewarm=False)
     job.seed_frontier(ref_job.store.read(spark, "frontier", as_of=0))
     job.crawl(max_waves=10)
 
     n_waves = job.store.latest_snapshot_id("seen") + 1
-    # exactly one fold per wave, each over that wave's rows only; summed
-    # they cover the seen table once — no wave rescanned history
+    # one build over wave 0's snapshot when the gate opens at wave 1, then
+    # one fold per later wave over that wave's rows only; summed they cover
+    # the seen table once — no wave rescanned history
     assert len(calls) == n_waves
     assert sum(calls) == job.seen_set().count()
-    # the filter's item count tracks the folds (the cost-gate input) and
-    # survives the per-snapshot blob round-trip
+    # the filter's item count tracks the folds and survives the blob
+    # round-trip
     assert job._bloom.n_items == job.seen_set().count()
-    # one persisted blob per wave (crash-safe incremental state)
+    # one persisted blob: each persist replaces the previous one
     blobs = sorted((job.store.root / "seen_bloom").glob("merged-*.bin"))
-    assert len(blobs) == n_waves
+    assert [b.name for b in blobs] == [f"merged-{n_waves - 1}.bin"]
 
-    # restart: a fresh job loads the blob — no partial build, no table read
+    # restart: the blob was sized at 2x the cards wave and the photo wave
+    # outgrew it, so a fresh job's sync rebuilds it once at 2x |seen|
+    n_seen = job.seen_set().count()
+    assert job._bloom.n_items > job._bloom.capacity()
     calls.clear()
     job2 = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                    prewarm=False, prefilter_min_seen=0)
+                    prewarm=False)
+    bloom = job2._bloom_sync()
+    assert calls == [n_seen] and bloom.capacity() >= 2 * n_seen
+
+    # restart again: the rebuilt blob fits — no partial build, no table read
+    calls.clear()
+    job2 = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
+                    prewarm=False)
     bloom = job2._bloom_sync()
     assert calls == [] and job2._bloom_snap == n_waves - 1
-    assert bloom is not None
-    assert bloom.n_items == job.seen_set().count()
+    assert bloom.n_items == n_seen
+    blobs = sorted((job.store.root / "seen_bloom").glob("merged-*.bin"))
 
-    # blobs lost (legacy store): one top-up build from the snapshot dirs
+    # blobs lost (legacy store): one build from the seen snapshot
     for b in blobs:
         b.unlink()
     job3 = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                    prewarm=False, prefilter_min_seen=0)
+                    prewarm=False)
     job3._bloom_sync()
-    assert len(calls) == 1 and sum(calls) == job.seen_set().count()
+    assert calls == [n_seen]
 
     # semantics: identical final state vs the exact-anti-join reference run
     for getter in ("cards", "seen_set", "missing_set"):
@@ -632,13 +635,15 @@ def test_e2e_crawl_over_deduped_archives_matches(
 
 
 def test_e2e_maintain_compacts_and_resume_stays_exact(
-        spark, sf_dir, tmp_path_factory):
+        spark, sf_dir, tmp_path_factory, monkeypatch):
     """Store maintenance between crawl sessions must not change results:
     run A crawls range 1 then range 2 straight; run B crawls range 1,
-    maintains (compact + expire, seen-filter rebuilt from the compacted
-    snapshot), then a NEW job seeds range 2 and crawls.  The rebuilt bloom
-    must keep suppressing range 1 (no false negatives after expiry) and
-    admit range 2; final tables identical."""
+    maintains (compact + expire; the seen-filter is dropped and rebuilt
+    from the compacted snapshot by the next wave), then a NEW job seeds
+    range 2 and crawls.  The rebuilt bloom must keep suppressing range 1
+    (no false negatives after expiry) and admit range 2; final tables
+    identical.  The gate at 0 keeps the filter path exercised."""
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
     pages = build_pages(spark, sf_dir)
 
     def run(store, with_maintain):
@@ -651,6 +656,7 @@ def test_e2e_maintain_compacts_and_resume_stays_exact(
             assert res["seen"]["compacted_to"] is not None
             assert res["seen"]["expired"] >= 2
             assert len(job.store.snapshots("seen")[-1]["dirs"]) == 1
+            assert not (job.store.root / "seen_bloom").exists()
             job = CrawlJob(spark, store, pages, wave_seconds=10**9,
                            use_bloom=True)
         job.enqueue_frontier(
@@ -674,52 +680,18 @@ def test_e2e_maintain_compacts_and_resume_stays_exact(
     assert seen.count() == seen.select("url_hash").distinct().count()
 
 
-def test_e2e_sharded_routed_seen_filter_matches_broadcast(
-    spark, crawl_result, tmp_path_factory
-):
-    """seen_filter="sharded-routed": the wave prefilter cogroups each bloom
-    bitmap shard with the frontier rows that can only probe it (the
-    10^10-key layout where the merged filter no longer broadcasts) — final
-    crawl state must equal the exact-anti-join reference run, and the wave
-    plan must actually route via cogroup (FlatMapCoGroupsInPandas)."""
-    ref_job, _, n_docs = crawl_result
-    pages = ref_job.pages
-    store = str(tmp_path_factory.mktemp("routedstore"))
-    job = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                   prewarm=False, prefilter_min_seen=0,
-                   seen_filter="sharded-routed")
-    job.seed_frontier(ref_job.store.read(spark, "frontier", as_of=0))
-    job.crawl(max_waves=10)
-
-    for getter in ("cards", "seen_set", "missing_set"):
-        da, db = getattr(ref_job, getter)(), getattr(job, getter)()
-        cols = [c for c in da.columns if c != "wave"]
-        assert (
-            da.select(cols).exceptAll(db.select(cols)).count() == 0
-            and db.select(cols).exceptAll(da.select(cols)).count() == 0
-        ), f"{getter} differs between sharded-routed and exact runs"
-
-    # the routed path was really taken: probe the prefilter plan directly
-    from crawler_spark.operators.seen import filter_unseen_with_bloom_sharded
-
-    bloom = job._bloom_sync()
-    assert bloom is not None and bloom.n_items > 0
-    flagged = filter_unseen_with_bloom_sharded(
-        ref_job.store.read(spark, "frontier", as_of=0), job.seen_set(), bloom
-    )
-    plan = flagged._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
-
-
-def test_corrupt_heal_through_resumed_cuckoo_job_equals_clean_run(
-        spark, tmp_path):
-    """C4 self-heal across a RESUME boundary (VERDICT r4 item 5): a card
-    corrupted in the stored crawl is healed by a brand-new CrawlJob over
-    the same store — the persisted cuckoo filter reloads from its blob,
-    the revalidation sweep DELETES the healed key from it, the re-crawl
-    re-adds it — and the final store state is indistinguishable from a
-    crawl that never saw the corruption."""
+def test_corrupt_heal_through_resumed_bloom_job_equals_clean_run(
+        spark, tmp_path, monkeypatch):
+    """C4 self-heal across a RESUME boundary: a card corrupted in the
+    stored crawl is healed by a brand-new CrawlJob over the same store —
+    the persisted bloom reloads from its blob, the healed key stays in it
+    as a stale false positive that the exact anti-join re-admits, the
+    re-crawl fetches it again — and the final store state is
+    indistinguishable from a crawl that never saw the corruption.  The
+    gate at 0 keeps the filter path exercised."""
     from crawler_spark.plans.crawl_job import CrawlJob
+
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
     from crawler_spark.sources.pages import (
         NUM_BASE, build_pages, synthetic_docs_from_range,
     )
@@ -747,34 +719,107 @@ def test_corrupt_heal_through_resumed_cuckoo_job_equals_clean_run(
 
     # baseline: never-corrupted run
     clean_job = CrawlJob(spark, str(tmp_path / "clean"), pages,
-                         wave_seconds=3600 * 1000, use_bloom=True,
-                         seen_filter="cuckoo")
+                         wave_seconds=3600 * 1000, use_bloom=True)
     clean_job.seed_range(NUM_BASE, NUM_BASE + 9)
     clean_job.crawl()
     want = final_state(clean_job)
 
     # run 1 crawls the corrupted universe, then "shuts down"
     job1 = CrawlJob(spark, str(tmp_path / "store"), broken,
-                    wave_seconds=3600 * 1000, use_bloom=True,
-                    seen_filter="cuckoo")
+                    wave_seconds=3600 * 1000, use_bloom=True)
     job1.seed_range(NUM_BASE, NUM_BASE + 9)
     job1.crawl()
     assert job1.cards().where(F.col("error").isNotNull()).count() == 1
     del job1
 
     # run 2: fresh job over the SAME store against the healed universe —
-    # cuckoo state must come from the persisted blob, not job1's memory
+    # bloom state must come from the persisted blob, not job1's memory
     job2 = CrawlJob(spark, str(tmp_path / "store"), pages,
-                    wave_seconds=3600 * 1000, use_bloom=True,
-                    seen_filter="cuckoo")
+                    wave_seconds=3600 * 1000, use_bloom=True)
     assert job2.revalidate_cards() == {"revalidated": 1}
-    assert not job2._filter_degraded
+    assert job2._bloom is not None
     job2.crawl()
 
     assert final_state(job2) == want
     # idempotence: a later sweep finds nothing to heal, enqueues nothing
     assert job2.revalidate_cards() == {"revalidated": 0}
     assert job2.pending_frontier().isEmpty()
+
+
+def _small_universe(spark, n_docs):
+    from crawler_spark.sources.pages import synthetic_docs_from_range
+
+    docs = synthetic_docs_from_range(spark, n_docs)
+    return build_pages(spark, "", include_fixtures=False, docs_df=docs)
+
+
+def test_crawl_below_prefilter_gate_keeps_no_filter(spark, tmp_path,
+                                                   monkeypatch):
+    """Below PREFILTER_MIN_SEEN the seen filter does not exist: a
+    use_bloom crawl folds nothing and writes no seen_bloom/ blob."""
+    calls: list = []
+    monkeypatch.setattr(CrawlJob, "_filter_add",
+                        lambda self, *a, **k: calls.append(a))
+    job = CrawlJob(spark, str(tmp_path / "store"), _small_universe(spark, 10),
+                   wave_seconds=10**9, use_bloom=True, prewarm=False)
+    job.seed_range(NUM_BASE, NUM_BASE + 9)
+    job.crawl()
+    job.enqueue_frontier(frontier_from_range(spark, NUM_BASE, NUM_BASE + 14))
+    job.crawl()
+    assert job.store.total_rows("seen") > 0
+    assert calls == []
+    assert job._bloom is None
+    assert not (tmp_path / "store" / "seen_bloom").exists()
+
+
+def test_resume_over_cuckoo_blob_rebuilds_bloom(spark, tmp_path, monkeypatch):
+    """A store whose seen_bloom/ holds a cuckoo blob (``CKF1`` magic, written
+    by older versions) resumes without raising: the blob is discarded, the
+    Bloom is rebuilt from the seen snapshot, and the tables equal those of
+    a clean exact-anti-join run over the same two sessions."""
+    import numpy as np
+
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
+    pages = _small_universe(spark, 20)
+
+    def session(store, use_bloom, before_second=None):
+        job = CrawlJob(spark, store, pages, wave_seconds=10**9,
+                       use_bloom=use_bloom, prewarm=False)
+        job.seed_range(NUM_BASE, NUM_BASE + 9)
+        job.crawl()
+        if before_second is not None:
+            before_second()
+            job = CrawlJob(spark, store, pages, wave_seconds=10**9,
+                           use_bloom=use_bloom, prewarm=False)
+        job.enqueue_frontier(
+            frontier_from_range(spark, NUM_BASE, NUM_BASE + 19)
+        )  # overlaps the first session's range
+        job.crawl()
+        return job
+
+    blob_dir = tmp_path / "b" / "seen_bloom"
+
+    def plant_cuckoo_blob():
+        (old,) = blob_dir.glob("merged-*.bin")
+        header = np.array([0x43_4B_46_31, 1024, 4, 500, 7], dtype=np.int64)
+        old.write_bytes(header.tobytes() + bytes(1024 * 4 * 2))
+
+    exact = session(str(tmp_path / "a"), use_bloom=False)
+    resumed = session(str(tmp_path / "b"), use_bloom=True,
+                      before_second=plant_cuckoo_blob)
+
+    (blob,) = blob_dir.glob("merged-*.bin")
+    rebuilt = ShardedBloom.from_bytes(blob.read_bytes())
+    assert rebuilt.n_items > 0
+    for getter in ("cards", "card_photos", "seen_set", "missing_set"):
+        da, db = getattr(exact, getter)(), getattr(resumed, getter)()
+        cols = [c for c in da.columns if c != "wave"]
+        assert (
+            da.select(cols).exceptAll(db.select(cols)).count() == 0
+            and db.select(cols).exceptAll(da.select(cols)).count() == 0
+        ), f"{getter} differs between cuckoo-blob resume and exact runs"
+    seen = resumed.seen_set()
+    assert seen.count() == seen.select("url_hash").distinct().count()
 
 
 def test_hot_host_cache_refreshes_on_composition_shift(spark, tmp_path):

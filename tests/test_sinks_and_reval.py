@@ -62,20 +62,24 @@ def test_mime_to_ext_mapping(spark):
     assert got == ["jpg", "jpg", "png", "webp", None]   # Images.fs:26-34
 
 
-@pytest.mark.parametrize("use_bloom,seen_filter", [
-    (False, "bloom"), (True, "bloom"), (True, "cuckoo"),
+@pytest.mark.parametrize("use_bloom,gate_open", [
+    pytest.param(False, False, id="False-bloom"),
+    pytest.param(True, False, id="True-bloom"),
+    pytest.param(True, True, id="True-bloom_gate0"),
 ])
-def test_revalidate_reenqueues_failed_parses(spark, tmp_path, use_bloom,
-                                             seen_filter):
+def test_revalidate_reenqueues_failed_parses(spark, tmp_path, monkeypatch,
+                                             use_bloom, gate_open):
     """A card whose stored parse failed is dropped from seen and re-enters
     the frontier; a second crawl against a FIXED universe re-fetches it.
 
-    With the bloom the healed card's url_hash is STALE in the filter
-    (blooms can't delete) — it must route through the maybe-seen band into
-    the exact anti-join, which confirms it unseen and re-fetches it.  The
-    cuckoo variant DELETES the healed key during the sweep and must behave
-    identically end-to-end."""
+    With the gate open (PREFILTER_MIN_SEEN at 0) the healed card's
+    url_hash is STALE in the bloom (blooms can't delete) — it must route
+    through the maybe-seen band into the exact anti-join, which confirms
+    it unseen and re-fetches it."""
     from crawler_spark.plans.crawl_job import CrawlJob
+
+    if gate_open:
+        monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
     from crawler_spark.sources.pages import (
         NUM_BASE, build_pages, synthetic_docs_from_range,
     )
@@ -92,8 +96,7 @@ def test_revalidate_reenqueues_failed_parses(spark, tmp_path, use_bloom,
     ).withColumn("html", F.encode(F.col("text"), "UTF-8"))
 
     job = CrawlJob(spark, str(tmp_path / "store"), broken,
-                   wave_seconds=3600 * 1000, use_bloom=use_bloom,
-                   seen_filter=seen_filter)
+                   wave_seconds=3600 * 1000, use_bloom=use_bloom)
     job.seed_range(NUM_BASE, NUM_BASE + 9)
     job.crawl()
     bad_before = job.cards().where(F.col("error").isNotNull()).count()
@@ -103,6 +106,7 @@ def test_revalidate_reenqueues_failed_parses(spark, tmp_path, use_bloom,
     job.pages = pages
     out = job.revalidate_cards()
     assert out["revalidated"] == 1
+    assert (job._bloom is not None) == gate_open
     job.crawl()
     latest_bad = (
         job.cards().where(F.col("id") == f"rf{NUM_BASE + 2}")

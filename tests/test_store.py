@@ -157,3 +157,21 @@ def test_snapshot_summary_row_counts(spark, tmp_path):
     _commit_range(spark, store, "t", 7, 9)
     assert store.snapshots("t")[-1]["rows"] == 2
     assert store.total_rows("t") is None
+
+
+def test_read_with_schema_surfaces_added_column_as_null(spark, tmp_path):
+    """A table whose older snapshot dirs predate a column (wave_metrics
+    before parse_fallbacks) reads under its declared schema on every read:
+    the old rows carry NULL, the new rows their value."""
+    store = SnapshotStore(str(tmp_path))
+    store.commit("wave_metrics", spark.createDataFrame(
+        [(0, 10)], "wave int, fetched long"))
+    store.commit("wave_metrics", spark.createDataFrame(
+        [(1, 20, 3)], "wave int, fetched long, parse_fallbacks long"))
+    schema = "wave int, fetched long, parse_fallbacks long"
+    for _ in range(3):
+        rows = sorted(
+            tuple(r) for r in
+            store.read_or_empty(spark, "wave_metrics", schema).collect()
+        )
+        assert rows == [(0, 10, None), (1, 20, 3)]
