@@ -380,7 +380,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def hash_join_backstop(spark, sf_dir):
         # J3-scale key discipline of the bucketed fetch join
-        # (operators/fetch.py fetch_downloaded(bucketed=True)): join on a
+        # (operators/fetch.py fetch_downloaded over url_hash pages): join on a
         # HASH of the key (the bucket layout's join column) with an exact
         # key-equality backstop, so hash collisions can never pair wrong
         # rows.  Expressed on the testdata tables with the md5-portable h32
@@ -8310,7 +8310,9 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # Poisson change-rate estimation: exact-integer change counts via a
-    # per-key lag window, bias-corrected rate -ln((n-c+.5)/(n+.5))/dbar;
+    # per-key lag window (digests compared NULL-safe, the first visit of a
+    # key counts nothing — estimate_change_rates' eqNullSafe and lag(t)
+    # guard), bias-corrected rate -ln((n-c+.5)/(n+.5))/dbar;
     # every ln input is a ratio of exact integers, outputs rounded 6/3
     o["crawl_change_rates"] = """
     WITH v AS (
@@ -8321,8 +8323,10 @@ def oracle_sql() -> dict[str, str]:
     ),
     ch AS (
       SELECT key, t,
-             (dg <> lag(dg) OVER (PARTITION BY key ORDER BY t))::int
-               AS changed
+             CASE WHEN lag(t) OVER (PARTITION BY key ORDER BY t) IS NOT NULL
+               THEN (dg IS DISTINCT FROM
+                     lag(dg) OVER (PARTITION BY key ORDER BY t))::int
+             END AS changed
       FROM v
     ),
     per AS (

@@ -166,10 +166,10 @@ class FrontierBench:
     def __init__(self, spark):
         self.spark = spark
         self.n_ids = BENCH_FRONTIER_URLS // 2  # two urls (rf/rl) per id
-        # hot-host list computed ONCE untimed — the production shape:
-        # CrawlJob refreshes it every hot_refresh_waves, so the steady-
-        # state wave pays one frontier scan + one shuffle, not a count
-        # aggregation job per wave (the list changes slowly by design)
+        # hot-host list computed ONCE untimed, so the timed pipeline is
+        # the selector's one frontier scan + one shuffle.  (CrawlJob
+        # itself skips salting below CrawlJob.HOT_HOST_MIN_ROWS frontier
+        # rows and computes the list inside each salted wave's plan.)
         from crawler_spark.operators.politeness import hot_host_list
         from crawler_spark.sources.frontier import frontier_from_range
 

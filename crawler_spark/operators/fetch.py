@@ -156,8 +156,7 @@ BROADCAST_MAX_WAVE_ROWS = 2_000_000
 def fetch_downloaded(frontier_df: DataFrame, pages_df: DataFrame,
                      wave_rows: int | None = None,
                      broadcast_max_rows: int = BROADCAST_MAX_WAVE_ROWS,
-                     faults_df: DataFrame | None = None,
-                     bucketed: bool = False) -> DataFrame:
+                     faults_df: DataFrame | None = None) -> DataFrame:
     """Payload fetch of the PRESENT urls only (inner join, frontier build side).
 
     This is the hot path feeding the parser/validator (absent rows come from
@@ -170,9 +169,10 @@ def fetch_downloaded(frontier_df: DataFrame, pages_df: DataFrame,
     * larger waves: hash-partitioned join on ``url`` with a shuffled-hash
       build of the frontier side — no broadcast of a multi-GB wave, and no
       sort of the payload rows (SHJ, not SMJ).
-    * ``bucketed=True``: `pages_df` is a catalog table written by
-      ``sources.pages.write_pages_bucketed`` (bucketed by ``url_hash``) —
-      the storage-partitioned join: the join runs on ``url_hash`` (plus an
+    * `pages_df` carries ``url_hash``: it is the catalog table
+      ``sources.pages.write_pages_bucketed`` writes (bucketed by
+      ``url_hash``; nothing else adds that column) — the
+      storage-partitioned join: the join runs on ``url_hash`` (plus an
       exact ``url`` equality filter, so hash collisions cannot pair wrong
       rows) and the pages side carries NO Exchange at any wave size; only
       the frontier shuffles to the bucket layout.  This is the 10^10-url
@@ -190,8 +190,7 @@ def fetch_downloaded(frontier_df: DataFrame, pages_df: DataFrame,
             .where(~_fault_active(frontier_df))
             .drop("fail_attempts")
         )
-    if bucketed:
-        assert "url_hash" in pages_df.columns, "bucketed pages need url_hash"
+    if "url_hash" in pages_df.columns:
         assert "url_hash" in frontier_cols, "frontier carries url_hash (S1)"
         pages_cols = pages_df.select(
             "url_hash",

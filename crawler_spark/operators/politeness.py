@@ -111,10 +111,10 @@ def hot_host_list(frontier_df: DataFrame,
     """Hosts holding >= ``hot_host_threshold`` frontier rows, as a slim
     one-column DataFrame.  Broadcast-safe by construction: at 10^10 urls
     the FULL per-host count table could be 10^7+ rows, but the hot subset
-    is bounded by total/threshold (<= 10^5 rows, KBs).  The hot set
-    changes slowly between waves — a crawl loop should compute it once
-    and refresh every few waves rather than re-aggregating the whole
-    frontier per wave (see CrawlJob.hot_refresh_waves)."""
+    is bounded by total/threshold (<= 10^5 rows, KBs).  A frontier with
+    fewer than ``hot_host_threshold`` rows has no hot host at all, so a
+    crawl loop can skip the aggregation from the row count alone (see
+    CrawlJob.HOT_HOST_MIN_ROWS)."""
     return (
         frontier_df.groupBy("host")
         .agg(F.count(F.lit(1)).alias("__host_n"))
@@ -142,10 +142,9 @@ def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
     rounding at scale, never a correctness issue.
 
     ``hot_hosts`` (optional) is a precomputed one-column host DataFrame
-    (see :func:`hot_host_list`).  Passing it skips the per-wave count
-    aggregation — the production shape, since the hot set changes slowly
-    and a stale entry only costs a few waves of either per-salt rounding
-    (cold host still salted) or single-task ranking (new-hot host not yet
+    (see :func:`hot_host_list`).  Passing it skips the count aggregation
+    over ``frontier_df``; a stale list only costs per-salt rounding (cold
+    host still salted) or single-task ranking (new-hot host not yet
     salted), never a budget violation beyond the documented n_salts-1.
     It is deduplicated here: a repeated host would duplicate its frontier
     rows through the join.

@@ -31,16 +31,14 @@ URL-seen set = seen ∪ missing = the reference's {card dirs} ∪ {missing lines
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.parse_udfs import with_parsed_card
 from ..functions.url import url_hash, url_host
 from ..operators.fetch import fetch_downloaded, fetch_wave, within_retry_budget
 from ..operators.photos import fanin_photos, fanout_photos, validate_image
-from ..operators.politeness import (
-    apply_robots, hot_host_list, select_wave, select_wave_salted,
-)
+from ..operators.politeness import apply_robots, select_wave, select_wave_salted
 from ..operators.seen import (
     ShardedBloom,
     build_bloom_into,
@@ -70,59 +68,31 @@ class CrawlJob:
     # frontier (measured: at sandbox scale the anti-join won every round),
     # so no filter exists at all — no fold, no blob
     PREFILTER_MIN_SEEN = 2_000_000
+    # hot-host salting gate: a host is hot at this many frontier rows.  The
+    # pending frontier's manifest row count bounds every host's count, so
+    # below it no host can be hot and the exact selector runs — no hot-list
+    # job; at or above it the salted selector finds the hot hosts inside
+    # the wave's own plan
+    HOT_HOST_MIN_ROWS = 100_000
 
     def __init__(self, spark: SparkSession, store_dir: str, pages_df: DataFrame,
                  wave_seconds: int = 3600, robots_df: DataFrame | None = None,
                  use_bloom: bool = False, salted: bool = True,
                  prewarm: bool = True,
-                 faults_df: DataFrame | None = None,
-                 retry_delay_unit_ms: int | None = None,
-                 retry_max_delay_ms: int | None = None,
-                 pages_bucketed: bool = False,
-                 hot_refresh_waves: int = 4,
-                 hot_host_threshold: int = 100_000):
+                 faults_df: DataFrame | None = None):
         self.spark = spark
         self.store = SnapshotStore(store_dir)
+        # a pages_df carrying url_hash (sources.pages.write_pages_bucketed)
+        # takes the storage-partitioned payload join (operators/fetch)
         self.pages = pages_df
-        # pages_bucketed: pages_df is a catalog table written by
-        # sources.pages.write_pages_bucketed (bucketed by url_hash) — the
-        # payload joins then run storage-partitioned with NO Exchange on the
-        # pages side at any wave size (the 10^10-url layout, operators/fetch)
-        self.pages_bucketed = pages_bucketed
-        if pages_bucketed:
-            assert "url_hash" in pages_df.columns, (
-                "bucketed pages must carry url_hash (write_pages_bucketed)"
-            )
         self.wave_seconds = wave_seconds
         self.robots = robots_df
         self.use_bloom = use_bloom
         self.salted = salted
-        # hot-host cache for the salted selector: the set of hosts above
-        # the salting threshold changes slowly between waves, so the
-        # per-wave frontier count aggregation is refreshed only every
-        # hot_refresh_waves waves (a stale entry costs a few waves of
-        # per-salt rounding or single-task ranking, never a budget
-        # violation beyond the documented n_salts-1 overshoot).
-        # Composition-shift guard: a wave whose frontier size (the row
-        # count of the previous wave's next-frontier commit — free from
-        # the manifest) moved outside [0.5x, 2x] of the size at the last
-        # refresh forces an early refresh — this is exactly the
-        # card-wave -> photo-wave transition, where a never-seen host
-        # (the photo CDN) can arrive already-hot and would otherwise
-        # rank unsalted in one task for up to hot_refresh_waves-1 waves.
-        self.hot_refresh_waves = max(1, hot_refresh_waves)
-        self.hot_host_threshold = hot_host_threshold
-        self._hot_hosts: list[str] | None = None
-        self._hot_age = 0
-        self._hot_n: int | None = None   # frontier-size est at last refresh
-        self._next_n: int | None = None  # est of the upcoming wave's frontier
         # F2 fault/retry surface: faults_df (url, fail_attempts) injects
-        # transport errors; the fib budget parameters default to the
-        # reference's 100ms unit / 180s cap (Downloader.fs:134-137)
+        # transport errors; retries follow the reference's fib budget
+        # (operators/fetch, Downloader.fs:134-137)
         self.faults = faults_df
-        from ..operators.fetch import DELAY_UNIT_MS, MAX_PERMITTED_DELAY_MS
-        self.retry_delay_unit_ms = retry_delay_unit_ms or DELAY_UNIT_MS
-        self.retry_max_delay_ms = retry_max_delay_ms or MAX_PERMITTED_DELAY_MS
         # wave pipelining state: one shared driver pool; per-table commit
         # chains (a table's next commit waits on its previous one, so
         # snapshot ids can never race); the deferred-finalize queue
@@ -257,7 +227,7 @@ class CrawlJob:
     def _pool(self):
         """Shared driver thread pool for wave-tail jobs.  16 workers is
         deadlock-safe by construction: pipeline depth is capped at 2 waves
-        (see run_wave head), each wave submits ≤12 tasks, and a wave's
+        (see run_wave head), each wave submits ≤9 tasks, and a wave's
         tasks only ever wait on the PREVIOUS wave's — which were submitted
         first, so FIFO worker assignment means they already hold workers
         and can always make progress (they depend only on a fully-drained
@@ -414,32 +384,13 @@ class CrawlJob:
 
         t0 = _mark("seen_missing_filters", t0)
 
-        # F3: politeness token bucket.  The salted path reuses the cached
-        # hot-host list (refreshed every hot_refresh_waves) so the steady-
-        # state wave pays ONE frontier scan + ONE shuffle instead of a
-        # count aggregation job per wave.
-        if self.salted:
-            est = self._next_n
-            shifted = est is not None and (
-                self._hot_n is None
-                or not (self._hot_n // 2 <= est <= self._hot_n * 2)
-            )
-            if (self._hot_hosts is None
-                    or self._hot_age >= self.hot_refresh_waves
-                    or shifted):
-                self._hot_hosts = sorted(
-                    r["host"] for r in hot_host_list(
-                        frontier, self.hot_host_threshold
-                    ).collect()
-                )
-                self._hot_age = 0
-                self._hot_n = est
-            self._hot_age += 1
-            hot_df = self.spark.createDataFrame(
-                [(h,) for h in self._hot_hosts], "host string"
-            )
+        # F3: politeness token bucket.  Hot-host salting only once the
+        # frontier can hold a hot host (a None count: older manifest)
+        if self.salted and (n_frontier is None
+                            or n_frontier >= self.HOT_HOST_MIN_ROWS):
             picked = select_wave_salted(
-                frontier, self.wave_seconds, self.robots, hot_hosts=hot_df
+                frontier, self.wave_seconds, self.robots,
+                hot_host_threshold=self.HOT_HOST_MIN_ROWS,
             )
         else:
             picked = select_wave(frontier, self.wave_seconds, self.robots)
@@ -497,7 +448,6 @@ class CrawlJob:
             parsed_src = fetch_downloaded(
                 batch.where(F.col("resource_type") == "card"), self.pages,
                 wave_rows=n_cards_wave, faults_df=self.faults,
-                bucketed=self.pages_bucketed,
             )
         else:
             parsed_src = self.spark.createDataFrame(
@@ -523,6 +473,18 @@ class CrawlJob:
             )
         ).cache()
         good_cards = parsed.where(F.col("error").isNull())
+        # the wave's stats ride the commits that scan these frames anyway
+        # (observed metrics, no job of their own): parsed_ok and the
+        # parse-fallback sum on the cards commit, deferred and
+        # enqueued_photos on the next-frontier commit
+        cards_obs, deferred_obs, photos_obs = (
+            Observation(), Observation(), Observation()
+        )
+        cards = parsed.observe(
+            cards_obs,
+            F.count(F.when(F.col("error").isNull(), 1)).alias("parsed_ok"),
+            F.sum(F.col("parse_fallback").cast("long")).alias("parse_fallbacks"),
+        ).drop("url", "parse_fallback")
 
         # J1: photo fan-out → next wave's frontier rows.  seq/num/kind ride
         # through the explode (card ids are unique), so the fan-out is a
@@ -551,7 +513,6 @@ class CrawlJob:
             photos_src = fetch_downloaded(
                 batch.where(F.col("resource_type") == "photo"), self.pages,
                 wave_rows=n_photos_wave, faults_df=self.faults,
-                bucketed=self.pages_bucketed,
             )
         else:
             photos_src = self.spark.createDataFrame(
@@ -575,13 +536,13 @@ class CrawlJob:
 
         absent = fetched.where(F.col("fetch_status") == "absent")
 
-        # EVERY remaining wave action — the seven table commits, the bloom
-        # fold, and the three stat aggregates — is submitted concurrently
-        # from driver threads.  The round-4 stage profiler (BENCH.md §16.2)
-        # measured the wave's fixed cost as ~10 s of SEQUENTIAL thin-job
-        # latency (each ≤0.2 s of task time behind 0.4-1.3 s of
-        # submit/barrier overhead); concurrent submission collapses that sum
-        # to the slowest member.  Sharing the `parsed`/`picked`/`fetched`
+        # EVERY remaining wave action — the seven table commits and the
+        # bloom fold — is submitted concurrently from driver threads (the
+        # wave's stats are observed on those commits, see cards_obs).  The
+        # round-4 stage profiler (BENCH.md §16.2) measured the wave's fixed
+        # cost as ~10 s of SEQUENTIAL thin-job latency (each ≤0.2 s of task
+        # time behind 0.4-1.3 s of submit/barrier overhead); concurrent
+        # submission collapses that sum to the slowest member.  Sharing the `parsed`/`picked`/`fetched`
         # caches across concurrent jobs is safe AND work-free: Spark's
         # BlockManager takes a per-block write lock in getOrElseUpdate, so a
         # second job needing a partition another job is already computing
@@ -633,25 +594,17 @@ class CrawlJob:
         frontier_cols = [c.split(" ")[0] for c in FRONTIER_SCHEMA.split(", ")]
         retries = (
             fetched.where(F.col("fetch_status") == "error")
-            .where(
-                within_retry_budget(
-                    F.col("attempt"),
-                    self.retry_delay_unit_ms,
-                    self.retry_max_delay_ms,
-                )
-            )
+            .where(within_retry_budget(F.col("attempt")))
             .withColumn("attempt", F.col("attempt") + 1)
             .select(*frontier_cols)
         )
-        next_frontier = deferred.unionByName(photo_frontier).unionByName(retries)
-
-        def _timed(label, fn):
-            def run():
-                ts = _time.perf_counter()
-                out = fn()
-                steps[label] = round(_time.perf_counter() - ts, 3)
-                return out
-            return run
+        next_frontier = (
+            deferred.observe(deferred_obs, F.count(F.lit(1)).alias("n"))
+            .unionByName(
+                photo_frontier.observe(photos_obs, F.count(F.lit(1)).alias("n"))
+            )
+            .unionByName(retries)
+        )
 
         def _seen_then_bloom():
             # seen = successfully STORED resources; once the gate has opened
@@ -668,18 +621,8 @@ class CrawlJob:
                 self._persist_bloom()
             return snap
 
-        def _commit_frontier():
-            snap = self.store.commit("frontier", next_frontier, mode="overwrite")
-            # the next wave's frontier size, feeding the hot-host
-            # composition-shift refresh; set on the frontier chain, which
-            # the next wave's head awaits, so it never reads a stale value
-            self._next_n = self.store.total_rows("frontier")
-            return snap
-
         fut = {
-            "cards": self._submit_commit(
-                "tail.cards", steps, "cards",
-                parsed.drop("url", "parse_fallback")),
+            "cards": self._submit_commit("tail.cards", steps, "cards", cards),
             "card_photos": self._submit_commit(
                 "tail.card_photos", steps, "card_photos", photo_results),
             "missing": self._submit_commit(
@@ -691,24 +634,9 @@ class CrawlJob:
                 "tail.host_metrics", steps, "host_metrics", host_metrics),
             "crawl_log": self._submit_commit(
                 "tail.crawl_log", steps, "crawl_log", log),
-            "frontier": self._submit_chained(
-                "tail.next_frontier", steps, "frontier", _commit_frontier),
-            "parsed_ok": self._pool.submit(_timed(
-                "tail.parsed_ok", good_cards.count)),
-            "parse_fallbacks": self._pool.submit(_timed(
-                "tail.parse_fallbacks",
-                lambda: parsed.agg(F.sum(
-                    F.col("parse_fallback").cast("long")
-                ).alias("n")).collect()[0]["n"])),
-            "enqueued_photos": self._pool.submit(_timed(
-                "tail.enqueued_photos", photo_frontier.count)),
-            "picked_agg": self._pool.submit(_timed(
-                "tail.picked_agg",
-                lambda: picked.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.when(F.col("selected"), 1).otherwise(0)).alias(
-                        "selected"),
-                ).collect()[0])),
+            "frontier": self._submit_commit(
+                "tail.next_frontier", steps, "frontier", next_frontier,
+                mode="overwrite"),
         }
         t_tail = _time.perf_counter()
 
@@ -730,21 +658,24 @@ class CrawlJob:
         def _finalize():
             # barrier on THIS wave's tail, complete the stats in place,
             # persist the wave metrics row (the K6 trace surface, queryable
-            # like any other table), then release the wave's caches
-            results = {k: f.result() for k, f in fut.items()}
+            # like any other table), then release the wave's caches.  Every
+            # commit resolves BEFORE an observation is read: a failed commit
+            # raises here instead of blocking Observation.get forever
+            for f in fut.values():
+                f.result()
             steps["parallel_tail"] = round(_time.perf_counter() - t_tail, 3)
-            prow = results["picked_agg"]
-            stats["parsed_ok"] = results["parsed_ok"]
-            stats["deferred"] = int(prow["n"]) - int(prow["selected"] or 0)
-            stats["enqueued_photos"] = results["enqueued_photos"]
+            card_row = cards_obs.get
+            stats["parsed_ok"] = int(card_row["parsed_ok"])
+            stats["deferred"] = int(deferred_obs.get["n"])
+            stats["enqueued_photos"] = int(photos_obs.get["n"])
             import json as _json
 
             return self.spark.createDataFrame(
                 [(
                     wave, int(stats["fetched"]), stats["downloaded"],
-                    stats["absent"], int(stats["parsed_ok"]),
-                    int(stats["deferred"]), int(stats["enqueued_photos"]),
-                    int(results["parse_fallbacks"] or 0),
+                    stats["absent"], stats["parsed_ok"],
+                    stats["deferred"], stats["enqueued_photos"],
+                    int(card_row["parse_fallbacks"] or 0),
                     _json.dumps(steps),
                 )],
                 "wave int, fetched long, downloaded long, absent long, "

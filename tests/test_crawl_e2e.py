@@ -370,7 +370,7 @@ def test_e2e_photo_mime_and_ext(crawl_result):
     assert cards and all(r["mime"] == "text/html; charset=utf-8" for r in cards)
 
 
-def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory):
+def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory, monkeypatch):
     """F2 e2e (Downloader.fs:154-182): a transport-erroring url re-enters
     the next wave with attempt+1 until it heals or the fibonacci delay
     budget is exhausted.
@@ -379,10 +379,13 @@ def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory):
     Card A heals after 2 failures (succeeds on attempt 2); card B always
     fails and must be given up after exactly 5 attempts.
     """
+    import crawler_spark.plans.crawl_job as cj
     from crawler_spark.functions.url import card_id_to_url
-    from crawler_spark.operators.fetch import max_attempts
+    from crawler_spark.operators.fetch import max_attempts, within_retry_budget
 
     assert max_attempts(30_000, 180_000) == 5
+    monkeypatch.setattr(cj, "within_retry_budget",
+                        lambda attempt: within_retry_budget(attempt, 30_000))
 
     docs = __import__(
         "crawler_spark.sources.pages", fromlist=["synthetic_docs_from_range"]
@@ -399,8 +402,7 @@ def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory):
     )
     job = CrawlJob(
         spark, str(tmp_path_factory.mktemp("faults")), pages,
-        wave_seconds=10**9, faults_df=faults,
-        retry_delay_unit_ms=30_000, prewarm=False,
+        wave_seconds=10**9, faults_df=faults, prewarm=False,
     )
     job.seed_range(NUM_BASE, NUM_BASE + 9)
     job.crawl(max_waves=20)
@@ -521,7 +523,7 @@ def test_e2e_bucketed_pages_crawl_matches(crawl_result, spark, tmp_path_factory)
     )
     job = CrawlJob(
         spark, str(tmp_path_factory.mktemp("bstore")), bucketed,
-        wave_seconds=10**9, prewarm=False, pages_bucketed=True,
+        wave_seconds=10**9, prewarm=False,
     )
     job.seed_frontier(ref_job.store.read(spark, "frontier", as_of=0))
     job.crawl(max_waves=10)
@@ -822,40 +824,153 @@ def test_resume_over_cuckoo_blob_rebuilds_bloom(spark, tmp_path, monkeypatch):
     assert seen.count() == seen.select("url_hash").distinct().count()
 
 
-def test_hot_host_cache_refreshes_on_composition_shift(spark, tmp_path):
-    """The cached hot-host list must pick up a host that FIRST appears in
-    a later wave (the photo CDN arrives in wave 2 already-hot): the
-    composition-shift trigger (next-frontier estimate outside [0.5x,2x]
-    of the last refresh) forces an early refresh, so the CDN is salted
-    without waiting out hot_refresh_waves.  Results stay identical to
-    the exact selector."""
-    from crawler_spark.plans.crawl_job import CrawlJob
-    from crawler_spark.sources.pages import (
-        NUM_BASE, build_pages, synthetic_docs_from_range,
-    )
+def _tables_equal(a, b, getters=("cards", "card_photos", "seen_set",
+                                  "missing_set")):
+    for getter in getters:
+        da, db = getattr(a, getter)(), getattr(b, getter)()
+        assert (
+            da.exceptAll(db).count() == 0 and db.exceptAll(da).count() == 0
+        ), f"{getter} differs"
 
-    docs = synthetic_docs_from_range(spark, 120)
-    pages = build_pages(spark, "", include_fixtures=False, docs_df=docs)
 
-    job = CrawlJob(spark, str(tmp_path / "salted"), pages,
-                   wave_seconds=3600 * 1000, hot_refresh_waves=10,
-                   hot_host_threshold=50)
-    job.seed_range(NUM_BASE, NUM_BASE + 119)
-    job.crawl()
-    # wave 1's refresh could only see pet911.ru; the CDN host carries the
-    # photo frontier and must have been picked up by the shift trigger
-    # (hot_refresh_waves=10 means the age trigger can NOT have fired)
-    assert "cdn.pet911.ru" in (job._hot_hosts or [])
+def test_crawl_below_hot_host_gate_runs_no_hot_list(spark, tmp_path,
+                                                   monkeypatch):
+    """Below HOT_HOST_MIN_ROWS the pending frontier cannot hold a hot host,
+    so a salted crawl never computes a hot-host list: with hot_host_list
+    patched to raise, the crawl completes with the exact selector's
+    tables."""
+    import crawler_spark.operators.politeness as pol
 
-    exact = CrawlJob(spark, str(tmp_path / "exact"), pages,
-                     wave_seconds=3600 * 1000, salted=False)
-    exact.seed_range(NUM_BASE, NUM_BASE + 119)
-    exact.crawl()
+    pages = _small_universe(spark, 20)
 
-    def state(j):
-        good = j.cards().where(F.col("error").isNull())
-        return sorted(
-            map(tuple, good.select("id", "address", "description").collect())
+    def crawl(store, salted):
+        job = CrawlJob(spark, str(tmp_path / store), pages,
+                       wave_seconds=3600 * 1000, salted=salted, prewarm=False)
+        job.seed_range(NUM_BASE, NUM_BASE + 19)
+        job.crawl()
+        return job
+
+    exact = crawl("exact", salted=False)
+
+    def boom(*a, **k):
+        raise AssertionError("hot_host_list ran below the gate")
+
+    monkeypatch.setattr(pol, "hot_host_list", boom)
+    salted = crawl("salted", salted=True)
+    assert salted.store.latest_snapshot_id("frontier") == 2  # seed + 2 waves
+    _tables_equal(salted, exact)
+
+
+def test_hot_host_salting_above_gate_matches_exact(spark, tmp_path,
+                                                  monkeypatch):
+    """At or above HOT_HOST_MIN_ROWS each wave computes its hot-host list
+    inside its own plan: the photo CDN, which first appears in the photo
+    wave, is in that wave's list.  The tables equal the exact selector's."""
+    import crawler_spark.operators.politeness as pol
+
+    monkeypatch.setattr(CrawlJob, "HOT_HOST_MIN_ROWS", 50)
+    hot_lists: list = []
+    real = pol.hot_host_list
+
+    def spy(frontier_df, hot_host_threshold=100_000):
+        out = real(frontier_df, hot_host_threshold)
+        hot_lists.append(
+            (hot_host_threshold, sorted(r["host"] for r in out.collect()))
         )
+        return out
 
-    assert state(job) == state(exact)
+    monkeypatch.setattr(pol, "hot_host_list", spy)
+    pages = _small_universe(spark, 120)
+
+    def crawl(store, salted):
+        job = CrawlJob(spark, str(tmp_path / store), pages,
+                       wave_seconds=3600 * 1000, salted=salted, prewarm=False)
+        job.seed_range(NUM_BASE, NUM_BASE + 119)
+        job.crawl()
+        return job
+
+    salted = crawl("salted", salted=True)
+    assert hot_lists == [(50, ["pet911.ru"]), (50, ["cdn.pet911.ru"])]
+    exact = crawl("exact", salted=False)
+    assert len(hot_lists) == 2
+    _tables_equal(salted, exact)
+
+
+def test_deferring_crawl_stats_match_commits(spark, tmp_path):
+    """The wave stats are observed on the commits: in a crawl whose
+    politeness budget defers (10 urls per host per wave), every wave's
+    deferred + enqueued_photos equals the row count of the next frontier
+    it committed, and parsed_ok equals its error-free cards rows."""
+    job = CrawlJob(spark, str(tmp_path / "store"), _small_universe(spark, 15),
+                   wave_seconds=600, prewarm=False)
+    job.seed_range(NUM_BASE, NUM_BASE + 14)
+    stats = job.crawl()
+
+    assert len(stats) > 3 and sum(s["deferred"] for s in stats) > 0
+    frontier_rows = {s["snapshot"]: s["rows"]
+                     for s in job.store.snapshots("frontier")}
+    cards_snaps = [s["snapshot"] for s in job.store.snapshots("cards")]
+    assert len(cards_snaps) == len(stats)
+    for s, snap in zip(stats, cards_snaps):
+        assert s["deferred"] + s["enqueued_photos"] == frontier_rows[s["wave"]]
+        wave_cards = spark.read.parquet(
+            str(job.store.root / "cards" / f"snap-{snap}"))
+        assert s["parsed_ok"] == wave_cards.where(
+            F.col("error").isNull()).count()
+    assert frontier_rows[stats[-1]["wave"]] == 0
+    assert sum(s["parsed_ok"] for s in stats) == job.cards().count()
+
+
+def test_failed_commit_raises_instead_of_blocking(spark, tmp_path,
+                                                  monkeypatch):
+    """The wave stats are read from observations on the commits, which a
+    failed commit never reports: the wave must surface the commit's
+    error, not block waiting for the observation."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from crawler_spark.sources.store import SnapshotStore
+
+    job = CrawlJob(spark, str(tmp_path / "store"), _small_universe(spark, 10),
+                   wave_seconds=10**9, prewarm=False)
+    job.seed_range(NUM_BASE, NUM_BASE + 9)
+    real = SnapshotStore.commit
+
+    def failing(store, table, *a, **k):
+        if table == "cards":
+            raise OSError("injected cards commit failure")
+        return real(store, table, *a, **k)
+
+    monkeypatch.setattr(SnapshotStore, "commit", failing)
+    ex = ThreadPoolExecutor(1)
+    try:
+        with pytest.raises(OSError, match="injected"):
+            ex.submit(job.run_wave).result(timeout=300)
+    finally:
+        ex.shutdown(wait=False)
+
+
+# Spark jobs of the crawl below at the commit before the hot-host manifest
+# gate and the observed wave stats (same session configuration)
+PARENT_CRAWL_JOBS = 90
+
+
+def test_two_wave_crawl_job_ceiling(spark, tmp_path):
+    """A wave runs only the jobs that write its tables: the two-wave crawl
+    (card wave, photo wave) spans at most 60% of the Spark jobs it took
+    when a hot-host list and four stat aggregates ran beside the commits."""
+    pages = _small_universe(spark, 120).persist()
+    pages.count()
+    robots = spark.createDataFrame(
+        [("pet911.ru", "/admin", 1), ("cdn.pet911.ru", "/admin", 1)],
+        "host string, disallow_prefix string, crawl_delay_ms int")
+    job = CrawlJob(spark, str(tmp_path / "store"), pages,
+                   wave_seconds=3600 * 1000, robots_df=robots,
+                   use_bloom=True, salted=True, prewarm=False)
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup() or [-1])
+    job.seed_range(NUM_BASE, NUM_BASE + 119)
+    stats = job.crawl()
+    n_jobs = max(tracker.getJobIdsForGroup()) - before
+    pages.unpersist()
+    assert len(stats) == 2
+    assert n_jobs <= 0.6 * PARENT_CRAWL_JOBS, n_jobs

@@ -527,3 +527,39 @@ def test_change_rate_null_digest_counts_as_change(spark):
     out = {r["key"]: r for r in estimate_change_rates(visits).collect()}
     assert out["A"]["n_changes"] == 2 and out["A"]["n_intervals"] == 2
     assert out["B"]["n_changes"] == 0 and out["B"]["n_intervals"] == 1
+
+
+def test_change_rate_oracle_counts_null_digests_like_spark(spark):
+    """The crawl_change_rates DuckDB oracle compares digests NULL-safe,
+    like estimate_change_rates: NULL -> value and value -> NULL are
+    changes, NULL -> NULL is not, and both engines agree on n_changes."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from crawler_spark.operators.graph import estimate_change_rates
+
+    rows = [
+        ("A", 0, None), ("A", 60, "a"),   # NULL -> value
+        ("B", 0, "b"), ("B", 60, None),   # value -> NULL
+        ("C", 0, None), ("C", 60, None),  # NULL -> NULL
+    ]
+    visits = spark.createDataFrame(
+        rows, "url string, sec long, digest string"
+    ).select("url", F.timestamp_seconds("sec").alias("ts"), "digest")
+    spark_changes = {
+        r["key"]: r["n_changes"]
+        for r in estimate_change_rates(visits).collect()
+    }
+
+    # the oracle's own change/aggregate CTEs over the fixture visits
+    oracle = entry.oracle_sql()["crawl_change_rates"]
+    values = ", ".join(
+        f"('{k}', {t}::bigint, {'NULL' if d is None else repr(d)}::varchar)"
+        for k, t, d in rows
+    )
+    sql = (f"WITH v AS (SELECT * FROM (VALUES {values}) f(key, t, dg)), "
+           + oracle[oracle.index("ch AS ("):])
+    duck_changes = dict(
+        duckdb.sql(f"SELECT key, n_changes FROM ({sql})").fetchall()
+    )
+    assert spark_changes == duck_changes == {"A": 1, "B": 1, "C": 0}

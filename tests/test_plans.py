@@ -136,7 +136,7 @@ def test_bucketed_pages_join_has_no_big_side_exchange(spark, sf_dir, tmp_path):
     )
     frontier = frontier_from_range(spark, 100_000, 100_050)
 
-    q = fetch_downloaded(frontier, bucketed, bucketed=True)
+    q = fetch_downloaded(frontier, bucketed)
     plan = plan_of(q)
     assert "Bucketed: true" in plan, plan[:1500]
     assert "SelectedBucketsCount: 8 out of 8" in plan

@@ -1,6 +1,7 @@
-"""Every name the bench and tool scripts import from ``crawler_spark``
-exists, so a script left importing a deleted name fails here rather than
-when someone runs it."""
+"""Every name the bench, tool and perfbench scripts use from
+``crawler_spark`` exists — imported names, ``CrawlJob`` keywords and the
+functions perfbench's tracer wraps — so a script left using a deleted name
+fails here rather than when someone runs it."""
 
 from __future__ import annotations
 
@@ -32,4 +33,57 @@ def test_script_imports_resolve(script):
         if not hasattr(importlib.import_module(module), name)
         and importlib.util.find_spec(f"{module}.{name}") is None
     ]
+    assert missing == []
+
+
+BENCH_SCRIPTS = SCRIPTS + sorted(ROOT.glob("perfbench/*.py"))
+
+
+def _crawljob_keywords(path: Path):
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Call) and "CrawlJob" in (
+            getattr(node.func, "id", None), getattr(node.func, "attr", None)
+        ):
+            for kw in node.keywords:
+                if kw.arg is not None:
+                    yield kw.arg, node.lineno
+
+
+@pytest.mark.parametrize("script", BENCH_SCRIPTS,
+                         ids=lambda p: f"{p.parent.name}/{p.name}")
+def test_script_crawljob_keywords_exist(script):
+    """Every keyword a bench, tool or perfbench script passes to
+    ``CrawlJob(...)`` is a parameter of ``CrawlJob.__init__``."""
+    import inspect
+
+    from crawler_spark.plans.crawl_job import CrawlJob
+
+    params = inspect.signature(CrawlJob.__init__).parameters
+    unknown = [f"{script.name}:{line} {kw}="
+               for kw, line in _crawljob_keywords(script) if kw not in params]
+    assert unknown == []
+
+
+def _tracer_table(name: str):
+    tree = ast.parse((ROOT / "perfbench" / "tracer.py").read_text())
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == name for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError(f"perfbench/tracer.py defines no {name}")
+
+
+def test_perfbench_traced_names_exist():
+    """Every function and method perfbench's tracer wraps (``TARGETS``,
+    ``METHODS``) still exists, so a traced run cannot silently lose a
+    layer."""
+    missing = []
+    for module, attr, *_ in _tracer_table("TARGETS"):
+        if not hasattr(importlib.import_module(module), attr):
+            missing.append(f"{module}.{attr}")
+    for module, cls, meth, _ in _tracer_table("METHODS"):
+        owner = getattr(importlib.import_module(module), cls, None)
+        if owner is None or not hasattr(owner, meth):
+            missing.append(f"{module}.{cls}.{meth}")
     assert missing == []
