@@ -6,44 +6,98 @@ with a 60s timeout (CrawlerPet911/Utils.fs:13-14, Downloader.fs:144-159) and
 no robots.txt support at all (grep-verified; SURVEY §2.2 F3).  Generalized
 per north_rule:
 
-* ``robots(host, disallow_prefix, crawl_delay_ms)`` table → anti-join drops
-  disallowed urls; crawl_delay feeds the token budget.
+* ``robots(host, disallow_prefix, crawl_delay_ms)`` table → read once into
+  driver memory (:class:`RobotsRules`, robots tables are KBs) and applied
+  row by row through literal host → prefixes / host → budget maps: no join,
+  no shuffle.  A url is blocked when its path starts with one of its own
+  host's disallow prefixes; crawl_delay feeds the token budget.
 * token bucket: a wave spanning ``wave_seconds`` may fetch at most
-  ``wave_seconds*1000/crawl_delay_ms`` urls per host; selection by priority
-  rank inside each host.  Deferred rows stay in the frontier for later waves.
+  ``wave_seconds*1000/crawl_delay_ms`` urls per host (a crawl delay ≤ 0 sets
+  no cap); selection by priority rank inside each host.  Deferred rows stay
+  in the frontier for later waves.  :func:`min_host_budget` is the smallest
+  budget any host gets: a frontier no larger than it defers nothing.
 * skew: hot hosts (pet-classifieds-style) blow up the per-host window sort;
   the salted variant ranks within (host, salt) so no single task sees a whole
   hot host, at the cost of ±n_salts rounding in the budget.
 
-All native window/join expressions — no Python.
+All native window/join/map expressions — no Python UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from itertools import chain
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.url import url_path_safe
 
 DEFAULT_CRAWL_DELAY_MS = 60_000  # the reference's 60s timeout budget, Utils.fs:13
+# the budget of a host whose crawl delay is ≤ 0: every row of it is in budget
+NO_CAP = 2**63 - 1
 
 
-def apply_robots(frontier_df: DataFrame, robots_df: DataFrame) -> DataFrame:
-    """Drop frontier urls matching a disallow prefix for their host.
+class RobotsRules(NamedTuple):
+    """A robots table read into driver memory: ``prefixes`` maps a host to
+    its disallow prefixes, ``delays`` to its smallest ``crawl_delay_ms``.
+    NULL hosts, prefixes and delays are left out — in the table they match
+    nothing either."""
 
-    robots_df: (host, disallow_prefix).  Broadcast — robots rules are tiny
-    relative to the frontier.  Path-prefix match on the url's path part.
-    """
-    rules = F.broadcast(robots_df.select("host", "disallow_prefix"))
-    path = url_path_safe(F.col("url"))
-    hit = (
-        frontier_df.withColumn("__path", path)
-        .join(rules, "host", "inner")
-        .where(F.col("__path").startswith(F.col("disallow_prefix")))
-        .select(frontier_df.columns)
-    )
-    return frontier_df.join(hit.select("url").distinct(), "url", "left_anti")
+    prefixes: dict[str, tuple[str, ...]]
+    delays: dict[str, float]
+
+
+def robots_rules(robots: DataFrame | RobotsRules) -> RobotsRules:
+    """Collect a ``robots(host, disallow_prefix, crawl_delay_ms)`` table in
+    one job (either rule column may be absent); a RobotsRules passes
+    through, so a crawl loop collects its static table once."""
+    if isinstance(robots, RobotsRules):
+        return robots
+    cols = [
+        F.col(c) if c in robots.columns else F.lit(None)
+        for c in ("host", "disallow_prefix", "crawl_delay_ms")
+    ]
+    prefixes: dict[str, set] = {}
+    delays: dict[str, float] = {}
+    for host, prefix, delay in robots.select(*cols).collect():
+        if host is None:
+            continue
+        if prefix is not None:
+            prefixes.setdefault(host, set()).add(prefix)
+        if delay is not None:
+            delays[host] = min(delay, delays.get(host, delay))
+    return RobotsRules({h: tuple(sorted(p)) for h, p in prefixes.items()}, delays)
+
+
+def _lit_map(d: dict, value) -> Column:
+    return F.create_map(*chain.from_iterable(
+        (F.lit(k), value(v)) for k, v in sorted(d.items())
+    ))
+
+
+def robots_blocked(robots: DataFrame | RobotsRules, url: str = "url",
+                   host: str = "host") -> Column:
+    """True where the row's url path (``url_path_safe``) starts with one of
+    its host's disallow prefixes, else false: a NULL url or host, a NULL
+    prefix and a host with only a delay row block nothing.  The verdict is
+    the row's own — it reads no other row."""
+    rules = robots_rules(robots)
+    if not rules.prefixes:
+        return F.lit(False)
+    by_host = _lit_map(rules.prefixes, lambda ps: F.array(*map(F.lit, ps)))
+    path = url_path_safe(F.col(url))
+    hit = F.exists(by_host[F.col(host)], lambda p: path.startswith(p))
+    return F.col(url).isNotNull() & F.coalesce(hit, F.lit(False))
+
+
+def apply_robots(frontier_df: DataFrame,
+                 robots_df: DataFrame | RobotsRules) -> DataFrame:
+    """Drop frontier urls matching a disallow prefix for their host: one
+    row-local filter (:func:`robots_blocked`), no join.  A DataFrame of
+    rules is collected on each call; pass :func:`robots_rules` to reuse."""
+    return frontier_df.where(~robots_blocked(robots_df))
 
 
 def apply_robots_rfc(frontier_df: DataFrame, rules_df: DataFrame) -> DataFrame:
@@ -77,33 +131,50 @@ def apply_robots_rfc(frontier_df: DataFrame, rules_df: DataFrame) -> DataFrame:
     return frontier_df.join(blocked, "url", "left_anti")
 
 
-def _budget_per_host(robots_df: DataFrame | None, wave_seconds: int):
-    if robots_df is None:
-        return F.lit(max(1, wave_seconds * 1000 // DEFAULT_CRAWL_DELAY_MS))
-    return F.greatest(
-        F.lit(1),
-        (F.lit(wave_seconds * 1000) / F.coalesce(F.col("crawl_delay_ms"), F.lit(DEFAULT_CRAWL_DELAY_MS))).cast("long"),
+def _host_budget(delay_ms: float, wave_seconds: int) -> int:
+    if delay_ms <= 0:
+        return NO_CAP
+    return max(1, min(NO_CAP, int(wave_seconds * 1000 // delay_ms)))
+
+
+def min_host_budget(robots: RobotsRules | None, wave_seconds: int) -> int:
+    """The smallest per-host budget of a wave: the budget of the largest
+    positive delay among the rules and the 60 s default.  No host can
+    exceed it with a frontier of at most this many rows, so such a frontier
+    is selected whole by either selector."""
+    delays = robots.delays.values() if robots is not None else ()
+    return _host_budget(
+        max([DEFAULT_CRAWL_DELAY_MS, *(d for d in delays if d > 0)]), wave_seconds
     )
 
 
+def _budget_per_host(robots: DataFrame | RobotsRules | None,
+                     wave_seconds: int) -> Column:
+    """Per-row budget of the row's host: a literal host → budget map lookup
+    for hosts with a crawl delay, the 60 s default otherwise."""
+    default = F.lit(_host_budget(DEFAULT_CRAWL_DELAY_MS, wave_seconds)).cast("long")
+    delays = robots_rules(robots).delays if robots is not None else {}
+    if not delays:
+        return default
+    budgets = {h: _host_budget(d, wave_seconds) for h, d in delays.items()}
+    by_host = _lit_map(budgets, lambda b: F.lit(b).cast("long"))
+    return F.coalesce(by_host[F.col("host")], default)
+
+
 def select_wave(frontier_df: DataFrame, wave_seconds: int = 60,
-                robots_df: DataFrame | None = None) -> DataFrame:
+                robots_df: DataFrame | RobotsRules | None = None) -> DataFrame:
     """Exact token bucket: rank urls within each host by crawl order
     (seq — Utils.fs:20-23 enumeration), keep rank ≤ budget.
 
     Adds ``selected`` boolean; callers fetch selected rows and carry the rest.
     """
-    df = frontier_df
-    if robots_df is not None:
-        delays = F.broadcast(
-            robots_df.groupBy("host").agg(F.min("crawl_delay_ms").alias("crawl_delay_ms"))
-        )
-        df = df.join(delays, "host", "left")
     w = Window.partitionBy("host").orderBy(F.col("seq").asc())
-    ranked = df.withColumn("__rank", F.row_number().over(w))
     budget = _budget_per_host(robots_df, wave_seconds)
-    out = ranked.withColumn("selected", F.col("__rank") <= budget).drop("__rank")
-    return out.drop("crawl_delay_ms") if robots_df is not None else out
+    return (
+        frontier_df.withColumn("__rank", F.row_number().over(w))
+        .withColumn("selected", F.col("__rank") <= budget)
+        .drop("__rank")
+    )
 
 
 def hot_host_list(frontier_df: DataFrame,
@@ -124,7 +195,7 @@ def hot_host_list(frontier_df: DataFrame,
 
 
 def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
-                       robots_df: DataFrame | None = None,
+                       robots_df: DataFrame | RobotsRules | None = None,
                        n_salts: int = 16,
                        hot_host_threshold: int = 100_000,
                        hot_hosts: DataFrame | None = None) -> DataFrame:
@@ -156,11 +227,6 @@ def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
     df = frontier_df.join(
         F.broadcast(hot_hosts.withColumn("__hot", F.lit(True))), "host", "left"
     )
-    if robots_df is not None:
-        delays = F.broadcast(
-            robots_df.groupBy("host").agg(F.min("crawl_delay_ms").alias("crawl_delay_ms"))
-        )
-        df = df.join(delays, "host", "left")
     is_hot = F.col("__hot").isNotNull()
     df = df.withColumn(
         "__salt",
@@ -170,7 +236,7 @@ def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
     budget = _budget_per_host(robots_df, wave_seconds)
     per_salt_budget = F.greatest(F.lit(1), (budget / F.lit(n_salts)).cast("long"))
     w = Window.partitionBy("host", "__salt").orderBy(F.col("seq").asc())
-    out = (
+    return (
         df.withColumn("__rank", F.row_number().over(w))
         .withColumn(
             "selected",
@@ -178,7 +244,6 @@ def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
         )
         .drop("__rank", "__salt", "__hot")
     )
-    return out.drop("crawl_delay_ms") if robots_df is not None else out
 
 
 def allocate_crawl_budget(hosts: DataFrame, budget: int,

@@ -1,6 +1,6 @@
 """robots.txt parsing — corpus text → the ``robots(host, disallow_prefix,
 crawl_delay_ms)`` rules table that :func:`..operators.politeness.apply_robots`
-and the token bucket consume.
+and the token bucket consume (both read it once, as ``RobotsRules``).
 
 The reference has NO robots support at all (grep-verified, SURVEY §2.2 F3 —
 it even drops its User-Agent header, ``CrawlerLib/Downloader.fs:70-72``);
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.url import url_host, url_path_safe
+from .politeness import robots_blocked
 
 
 def robots_pages(pages_df: DataFrame) -> DataFrame:
@@ -208,31 +209,19 @@ def robots_coverage(frontier_df: DataFrame, robots_df: DataFrame) -> DataFrame:
     host whose robots suddenly blocks 95% of queued URLs should trigger a
     frontier rebuild, not a silent near-empty wave.
 
-    Same broadcast prefix-match join as ``apply_robots``; instead of the
-    anti-join, a left-semi marks blocked urls and one groupBy(host) rolls
-    up.  Returns (host, n_urls, n_blocked, blocked_frac) — blocked_frac
-    rounded to 6.
+    The rules are collected once and flag each row with the same
+    expression ``apply_robots`` filters on (``politeness.robots_blocked``);
+    one groupBy(host) rolls up.  Returns (host, n_urls, n_blocked,
+    blocked_frac) — blocked_frac rounded to 6.
     """
-    rules = F.broadcast(robots_df.select("host", "disallow_prefix"))
-    path = url_path_safe(F.col("url"))
-    with_path = frontier_df.select("host", "url", path.alias("__path"))
-    blocked = (
-        with_path.join(rules, "host", "inner")
-        .where(F.col("__path").startswith(F.col("disallow_prefix")))
-        .select("url")
-        .distinct()
-    )
-    flagged = with_path.join(
-        blocked.select("url", F.lit(1).alias("__b")), "url", "left"
+    flagged = frontier_df.select(
+        "host", robots_blocked(robots_df).cast("long").alias("__b")
     )
     return flagged.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("n_urls"),
-        F.sum(F.coalesce(F.col("__b"), F.lit(0))).cast("long")
-        .alias("n_blocked"),
+        F.sum("__b").cast("long").alias("n_blocked"),
         F.round(
-            F.sum(F.coalesce(F.col("__b"), F.lit(0))).cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            6,
+            F.sum("__b").cast("double") / F.count(F.lit(1)).cast("double"), 6
         ).alias("blocked_frac"),
     )
 

@@ -38,7 +38,13 @@ from ..functions.parse_udfs import with_parsed_card
 from ..functions.url import url_hash, url_host
 from ..operators.fetch import fetch_downloaded, fetch_wave, within_retry_budget
 from ..operators.photos import fanin_photos, fanout_photos, validate_image
-from ..operators.politeness import apply_robots, select_wave, select_wave_salted
+from ..operators.politeness import (
+    apply_robots,
+    min_host_budget,
+    robots_rules,
+    select_wave,
+    select_wave_salted,
+)
 from ..operators.seen import (
     ShardedBloom,
     build_bloom_into,
@@ -86,7 +92,9 @@ class CrawlJob:
         # takes the storage-partitioned payload join (operators/fetch)
         self.pages = pages_df
         self.wave_seconds = wave_seconds
-        self.robots = robots_df
+        # the robots table never changes during a job: collected once here,
+        # every wave applies it as row-local expressions (no join)
+        self.robots = None if robots_df is None else robots_rules(robots_df)
         self.use_bloom = use_bloom
         self.salted = salted
         # F2 fault/retry surface: faults_df (url, fail_attempts) injects
@@ -385,13 +393,22 @@ class CrawlJob:
         t0 = _mark("seen_missing_filters", t0)
 
         # F3: politeness token bucket.  Hot-host salting only once the
-        # frontier can hold a hot host (a None count: older manifest)
+        # frontier can hold a hot host (a None count: older manifest); it
+        # rounds a hot host's budget per salt, so it is never elided.
+        # Below that, the pending count bounds every host's rows: a frontier
+        # that fits the smallest per-host budget is selected whole — no
+        # window, no shuffle, crawl order kept within partitions
         if self.salted and (n_frontier is None
                             or n_frontier >= self.HOT_HOST_MIN_ROWS):
             picked = select_wave_salted(
                 frontier, self.wave_seconds, self.robots,
                 hot_host_threshold=self.HOT_HOST_MIN_ROWS,
             )
+        elif (n_frontier is not None and n_frontier
+                <= min_host_budget(self.robots, self.wave_seconds)):
+            picked = frontier.withColumn(
+                "selected", F.lit(True)
+            ).sortWithinPartitions("host", "seq")
         else:
             picked = select_wave(frontier, self.wave_seconds, self.robots)
         picked.cache()
@@ -681,7 +698,7 @@ class CrawlJob:
                 "wave int, fetched long, downloaded long, absent long, "
                 "parsed_ok long, deferred long, enqueued_photos long, "
                 "parse_fallbacks long, step_seconds_json string",
-            )
+            ).coalesce(1)  # one row, one task, one parquet file
 
         def _release():
             picked.unpersist()

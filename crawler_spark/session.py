@@ -67,6 +67,10 @@ def get_spark(app_name: str = "crawler-spark", cores: int | None = None,
             os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "1g"),
         )
         .config("spark.ui.enabled", "false")
+        # generated-code cache: one crawl wave's plans compile ~150 distinct
+        # classes, so Spark's default of 100 evicted the last wave's classes
+        # and every wave recompiled them (Janino, then the JVM's JIT anew)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # catalog home for bucketed tables (write_pages_bucketed) — session
         # catalog metadata is in-memory; only table data lands here
         .config(

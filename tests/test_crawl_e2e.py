@@ -896,16 +896,35 @@ def test_hot_host_salting_above_gate_matches_exact(spark, tmp_path,
     _tables_equal(salted, exact)
 
 
-def test_deferring_crawl_stats_match_commits(spark, tmp_path):
+def _spy(monkeypatch, module, name):
+    """Wrap ``module.name`` so the returned list records every call."""
+    calls: list = []
+    real = getattr(module, name)
+
+    def spy(*a, **k):
+        calls.append(a)
+        return real(*a, **k)
+
+    monkeypatch.setattr(module, name, spy)
+    return calls
+
+
+def test_deferring_crawl_stats_match_commits(spark, tmp_path, monkeypatch):
     """The wave stats are observed on the commits: in a crawl whose
     politeness budget defers (10 urls per host per wave), every wave's
     deferred + enqueued_photos equals the row count of the next frontier
-    it committed, and parsed_ok equals its error-free cards rows."""
+    it committed, and parsed_ok equals its error-free cards rows.  The
+    30-row seed frontier exceeds the 10-row budget, so the selection
+    window runs."""
+    import crawler_spark.plans.crawl_job as cj
+
+    selects = _spy(monkeypatch, cj, "select_wave")
     job = CrawlJob(spark, str(tmp_path / "store"), _small_universe(spark, 15),
                    wave_seconds=600, prewarm=False)
     job.seed_range(NUM_BASE, NUM_BASE + 14)
     stats = job.crawl()
 
+    assert selects
     assert len(stats) > 3 and sum(s["deferred"] for s in stats) > 0
     frontier_rows = {s["snapshot"]: s["rows"]
                      for s in job.store.snapshots("frontier")}
@@ -949,28 +968,94 @@ def test_failed_commit_raises_instead_of_blocking(spark, tmp_path,
         ex.shutdown(wait=False)
 
 
-# Spark jobs of the crawl below at the commit before the hot-host manifest
-# gate and the observed wave stats (same session configuration)
-PARENT_CRAWL_JOBS = 90
+def test_zero_crawl_delay_sets_no_host_cap(spark, tmp_path):
+    """``Crawl-delay: 0`` parses to crawl_delay_ms = 0, which sets no cap
+    on its host: the card wave fetches every card url of pet911.ru in one
+    wave, while the photo host keeps the 60 s default budget (10 urls per
+    600 s wave) and defers."""
+    from crawler_spark.operators.robots import parse_robots
+
+    robots = parse_robots(spark.createDataFrame(
+        [("pet911.ru", "User-agent: *\nCrawl-delay: 0\n")],
+        "host string, text string"))
+    assert [r["crawl_delay_ms"] for r in robots.collect()] == [0]
+    job = CrawlJob(spark, str(tmp_path / "store"), _small_universe(spark, 15),
+                   wave_seconds=600, robots_df=robots, prewarm=False)
+    job.seed_range(NUM_BASE, NUM_BASE + 14)
+    stats = job.crawl()
+
+    assert stats[0]["fetched"] == 30 and stats[0]["deferred"] == 0
+    assert len(stats) > 2
+    assert all(s["fetched"] <= 10 for s in stats[1:])
+    assert job.pending_frontier().isEmpty()
+
+
+def test_robots_crawl_without_window_matches_windowed(spark, tmp_path,
+                                                     monkeypatch):
+    """A pending frontier no larger than the smallest per-host budget is
+    selected whole, with no selector at all; the tables equal those of
+    the same robots crawl with that gate shut (the selection window
+    runs), and each wave_metrics row is written as one parquet file."""
+    import crawler_spark.plans.crawl_job as cj
+    from crawler_spark.functions.url import CARD_URL_TEMPLATE
+
+    pages = _small_universe(spark, 20)
+    rf_cards = CARD_URL_TEMPLATE[len("https://pet911.ru"):-len("%s")] + "rf"
+    robots = spark.createDataFrame(
+        [("pet911.ru", rf_cards, 1), ("cdn.pet911.ru", "/admin", 1)],
+        "host string, disallow_prefix string, crawl_delay_ms int")
+
+    def crawl(store):
+        job = CrawlJob(spark, str(tmp_path / store), pages,
+                       wave_seconds=3600 * 1000, robots_df=robots,
+                       prewarm=False)
+        job.seed_range(NUM_BASE, NUM_BASE + 19)
+        job.crawl()
+        return job
+
+    selects = _spy(monkeypatch, cj, "select_wave")
+    salted = _spy(monkeypatch, cj, "select_wave_salted")
+    gate_open = crawl("open")
+    assert selects == [] and salted == []
+    monkeypatch.setattr(cj, "min_host_budget", lambda *a: 0)
+    windowed = crawl("shut")
+    assert len(selects) == 2
+    _tables_equal(gate_open, windowed,
+                  ("cards", "card_photos", "seen_set", "missing_set",
+                   "crawl_log", "host_metrics"))
+    a, b = (j.wave_metrics().drop("step_seconds_json")
+            for j in (gate_open, windowed))
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    assert gate_open.cards().where(F.col("id").startswith("rf")).isEmpty()
+    for snap in gate_open.store.snapshots("wave_metrics"):
+        wave_dir = gate_open.store.root / "wave_metrics" / snap["dirs"][-1]
+        assert len(list(wave_dir.glob("*.parquet"))) == 1
+
+
+# Spark jobs of the crawl below, counted from before CrawlJob(...), at the
+# commit before the robots rules were read into row-local expressions and
+# the selection window was gated (same session configuration)
+PARENT_CRAWL_JOBS = 50
 
 
 def test_two_wave_crawl_job_ceiling(spark, tmp_path):
     """A wave runs only the jobs that write its tables: the two-wave crawl
-    (card wave, photo wave) spans at most 60% of the Spark jobs it took
-    when a hot-host list and four stat aggregates ran beside the commits."""
+    (card wave, photo wave), counted from the job's construction (which
+    collects the robots table once), runs at most 42 Spark jobs — no
+    robots join, no delay aggregate and no selection window."""
     pages = _small_universe(spark, 120).persist()
     pages.count()
     robots = spark.createDataFrame(
         [("pet911.ru", "/admin", 1), ("cdn.pet911.ru", "/admin", 1)],
         "host string, disallow_prefix string, crawl_delay_ms int")
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup() or [-1])
     job = CrawlJob(spark, str(tmp_path / "store"), pages,
                    wave_seconds=3600 * 1000, robots_df=robots,
                    use_bloom=True, salted=True, prewarm=False)
-    tracker = spark.sparkContext.statusTracker()
-    before = max(tracker.getJobIdsForGroup() or [-1])
     job.seed_range(NUM_BASE, NUM_BASE + 119)
     stats = job.crawl()
     n_jobs = max(tracker.getJobIdsForGroup()) - before
     pages.unpersist()
     assert len(stats) == 2
-    assert n_jobs <= 0.6 * PARENT_CRAWL_JOBS, n_jobs
+    assert n_jobs <= 42 < PARENT_CRAWL_JOBS, n_jobs

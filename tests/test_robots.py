@@ -319,3 +319,65 @@ def test_sitemap_conflicts_flag_blocked_entries(spark):
     assert c["conflict"] and c["rule_pattern"] == "/private*"
     # longest-match Allow rescues the explicit exception
     assert not out["https://ex.com/private/ok"]["conflict"]
+
+
+def test_apply_robots_matches_join_semantics(spark):
+    """apply_robots (one row-local expression over the collected rules)
+    keeps exactly the rows a broadcast prefix join + url anti-join keeps,
+    and robots_coverage flags the same rows: NULL host, NULL url,
+    unparseable urls, NULL prefixes, two prefixes on one host, duplicate
+    rules, a delay-only host and an empty prefix (blocks the whole host)."""
+    from crawler_spark.functions.url import url_path_safe
+    from crawler_spark.operators.robots import robots_coverage
+
+    frontier = spark.createDataFrame(
+        [
+            ("h1", "https://h1/private/a", 1),
+            ("h1", "https://h1/pub/a", 2),
+            ("h1", "https://h1", 3),                 # bare host -> path '/'
+            ("h1", "not a url", 4),
+            ("h1", "::://h1/private", 5),
+            (None, "https://h1/private/b", 6),       # NULL host
+            ("h2", "https://h2/x/y", 7),             # two prefixes
+            ("h2", "https://h2/z", 8),
+            ("h2", "https://h2/w", 9),
+            ("h3", "https://h3/private", 10),        # delay-only host
+            ("h4", "https://h4/anything", 11),       # empty prefix
+            ("h4", None, 12),                        # NULL url
+            ("h5", None, 13),                        # NULL url vs Disallow: /
+            ("h5", "https://h5/a", 14),
+            ("h6", "https://h6/private", 15),        # no rules at all
+        ],
+        "host string, url string, seq long",
+    )
+    rules = spark.createDataFrame(
+        [
+            ("h1", "/private", None),
+            ("h1", "/private", 5),                   # duplicate rule
+            ("h1", None, 7),                         # NULL prefix
+            ("h2", "/x", None),
+            ("h2", "/z", 1000),
+            ("h3", None, 10),
+            (None, "/", 3),                          # NULL host rule
+            ("h4", "", None),
+            ("h5", "/", None),
+        ],
+        "host string, disallow_prefix string, crawl_delay_ms long",
+    )
+    hit = (
+        frontier.withColumn("__path", url_path_safe(F.col("url")))
+        .join(F.broadcast(rules.select("host", "disallow_prefix")), "host")
+        .where(F.col("__path").startswith(F.col("disallow_prefix")))
+        .select("url").distinct()
+    )
+    want = frontier.join(hit, "url", "left_anti").select(frontier.columns)
+    got = apply_robots(frontier, rules)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert sorted(r["seq"] for r in got.collect()) == [
+        2, 3, 4, 5, 6, 9, 10, 12, 13, 15]
+
+    cov = {r["host"]: r["n_blocked"]
+           for r in robots_coverage(frontier, rules).collect()}
+    assert cov == {"h1": 1, None: 0, "h2": 2, "h3": 0, "h4": 1, "h5": 1,
+                   "h6": 0}
