@@ -53,6 +53,7 @@ from ..operators.seen import (
     filter_unseen_with_bloom,
 )
 from ..sources.frontier import frontier_from_range
+from ..sources.local import local_frame
 from ..sources.store import SnapshotStore
 
 FRONTIER_SCHEMA = (
@@ -62,6 +63,11 @@ FRONTIER_SCHEMA = (
 SEEN_SCHEMA = "url_hash long, id string, wave int"
 MISSING_SCHEMA = "id string, wave int"
 LOG_SCHEMA = "wave int, seq long, id string, resource_type string, status string, error string"
+WAVE_METRICS_SCHEMA = (
+    "wave int, fetched long, downloaded long, absent long, parsed_ok long, "
+    "deferred long, enqueued_photos long, parse_fallbacks long, "
+    "step_seconds_json string"
+)
 
 # photos occupy seq slots right after their parent card:
 # photo_seq' = parent_seq * PHOTO_SEQ_SLOT + photo_index + 1 (≤64 photos/card)
@@ -307,18 +313,30 @@ class CrawlJob:
 
     def enqueue_frontier(self, frontier_df: DataFrame) -> None:
         """Union new descriptors into the pending frontier (newcards mode:
-        each poll cycle enqueues freshly discovered ids, Program.fs:97-98)."""
-        if self.store.latest_snapshot_id("frontier") is None:
-            self.store.commit("frontier", frontier_df, mode="overwrite")
-            return
-        merged = (
-            self.pending_frontier()
-            .unionByName(frontier_df)
-            .dropDuplicates(["id"])
-        )
-        self.store.commit("frontier", merged, mode="overwrite")
+        each poll cycle enqueues freshly discovered ids, Program.fs:97-98).
+        A pending frontier the manifest proves empty (never committed, or
+        drained — every poll after a finished crawl) is not read at all."""
+        merged = frontier_df
+        if self.store.total_rows("frontier") != 0:
+            merged = self.pending_frontier().unionByName(frontier_df)
+        self.store.commit("frontier", merged.dropDuplicates(["id"]),
+                          mode="overwrite")
 
     # ------------------------------------------------------------------ waves
+    def _downloaded(self, batch: DataFrame, resource_type: str,
+                    n_downloaded: int, n_rows: int) -> DataFrame:
+        """Payload rows of the wave's downloaded ``resource_type`` urls.
+        With none downloaded the batch is cut by ``where(false)``, so the
+        optimizer plans this path and the parse or validation above it as
+        ``LocalTableScan <empty>``: no pages scan, no Python, no task."""
+        rows = batch.where(F.col("resource_type") == resource_type)
+        if not n_downloaded:
+            rows = rows.where(F.lit(False))
+        # wave size gates the join strategy: broadcast small waves,
+        # hash-partitioned join for waves too big to broadcast
+        return fetch_downloaded(rows, self.pages, wave_rows=n_rows,
+                                faults_df=self.faults)
+
     def run_wave(self, drain: bool = True) -> dict:
         """Execute one fetch wave; commits one snapshot per state table.
         Returns wave stats (also appended to crawl_log), including a
@@ -459,20 +477,11 @@ class CrawlJob:
         t0 = _mark("fetch_plan", t0)
 
         # ---- cards ----------------------------------------------------------
-        if n_cards_dl:
-            # wave size gates the join strategy: broadcast small waves,
-            # hash-partitioned join for waves too big to broadcast
-            parsed_src = fetch_downloaded(
-                batch.where(F.col("resource_type") == "card"), self.pages,
-                wave_rows=n_cards_wave, faults_df=self.faults,
-            )
-        else:
-            parsed_src = self.spark.createDataFrame(
-                [], FRONTIER_SCHEMA + ", warc_ts timestamp, html binary, "
-                    "text string, mime string, fetch_status string"
-            )
         parsed = (
-            with_parsed_card(parsed_src, "text")
+            with_parsed_card(
+                self._downloaded(batch, "card", n_cards_dl, n_cards_wave),
+                "text",
+            )
             .select(
                 "seq",
                 # parsed card id (byte-identical extraction) when the parse
@@ -488,7 +497,10 @@ class CrawlJob:
                 # aggregated into wave_metrics.parse_fallbacks)
                 "parse_fallback",
             )
-        ).cache()
+        )
+        if n_cards_dl:
+            # an empty card path is a LocalRelation: nothing to cache
+            parsed = parsed.cache()
         good_cards = parsed.where(F.col("error").isNull())
         # the wave's stats ride the commits that scan these frames anyway
         # (observed metrics, no job of their own): parsed_ok and the
@@ -526,19 +538,11 @@ class CrawlJob:
         )
 
         # ---- photos ---------------------------------------------------------
-        if n_photos_dl:
-            photos_src = fetch_downloaded(
-                batch.where(F.col("resource_type") == "photo"), self.pages,
-                wave_rows=n_photos_wave, faults_df=self.faults,
-            )
-        else:
-            photos_src = self.spark.createDataFrame(
-                [], FRONTIER_SCHEMA + ", warc_ts timestamp, html binary, "
-                    "text string, mime string, fetch_status string"
-            )
         from ..operators.photos import mime_to_ext
 
-        photo_results = validate_image(photos_src).select(
+        photo_results = validate_image(
+            self._downloaded(batch, "photo", n_photos_dl, n_photos_wave)
+        ).select(
             F.split(F.col("id"), "/")[0].alias("card_id"),
             F.col("seq"),
             F.col("id").alias("photo_id"),
@@ -687,7 +691,8 @@ class CrawlJob:
             stats["enqueued_photos"] = int(photos_obs.get["n"])
             import json as _json
 
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(
                     wave, int(stats["fetched"]), stats["downloaded"],
                     stats["absent"], stats["parsed_ok"],
@@ -695,10 +700,8 @@ class CrawlJob:
                     int(card_row["parse_fallbacks"] or 0),
                     _json.dumps(steps),
                 )],
-                "wave int, fetched long, downloaded long, absent long, "
-                "parsed_ok long, deferred long, enqueued_photos long, "
-                "parse_fallbacks long, step_seconds_json string",
-            ).coalesce(1)  # one row, one task, one parquet file
+                WAVE_METRICS_SCHEMA,
+            )
 
         def _release():
             picked.unpersist()
@@ -805,12 +808,7 @@ class CrawlJob:
         return self._read("crawl_log", LOG_SCHEMA)
 
     def wave_metrics(self) -> DataFrame:
-        return self._read(
-            "wave_metrics",
-            "wave int, fetched long, downloaded long, absent long, "
-            "parsed_ok long, deferred long, enqueued_photos long, "
-            "parse_fallbacks long, step_seconds_json string",
-        )
+        return self._read("wave_metrics", WAVE_METRICS_SCHEMA)
 
     def host_metrics(self) -> DataFrame:
         return self._read(

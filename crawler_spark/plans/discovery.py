@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.parse_udfs import parse_catalog_udf, parse_check_api
 from ..operators.fetch import fetch_wave
+from ..sources.local import local_frame
 from ..sources.pages import CATALOG_BASES, CHECK_API_URL
 
 MAX_CATALOG_PAGES = 10_000  # runaway-loop guard; reference recurses unbounded
@@ -42,8 +43,8 @@ class DiscoveryError(RuntimeError):
 
 def _fetch_pages(spark: SparkSession, pages_df: DataFrame,
                  urls: list[str]) -> DataFrame:
-    probe = spark.createDataFrame([(u,) for u in urls], "url string")
-    return fetch_wave(probe, pages_df)
+    return fetch_wave(local_frame(spark, [(u,) for u in urls], "url string"),
+                      pages_df)
 
 
 def fetch_catalog_page(spark: SparkSession, pages_df: DataFrame,
@@ -91,7 +92,7 @@ def get_new_cards_from_catalog(spark: SparkSession, pages_df: DataFrame,
         return page1.orderBy(F.col("num").desc()).limit(1)
 
     known_df = F.broadcast(
-        spark.createDataFrame([(int(n),) for n in known_nums], "num long")
+        local_frame(spark, [(int(n),) for n in known_nums], "num long")
     )
     acc: DataFrame | None = None
     for page_num in range(1, MAX_CATALOG_PAGES + 1):
@@ -195,20 +196,21 @@ def newcards_cycle(job, known_nums: set[int],
     if known_nums:
         max_known = max(known_nums)
         found = found.where(F.col("num") > max_known)
-    ids = found.select("id")
-    if ids.isEmpty():
+    # the lookahead bounds the new ids (a few per probed prefix): they come
+    # to the driver once and re-enter as a local frame, so the probe join
+    # runs once per poll, not once per consumer
+    ids = [(r["id"],) for r in found.select("id").collect()]
+    if not ids:
         return set(known_nums), []
 
-    job.enqueue_frontier(frontier_from_ids(ids))
+    job.enqueue_frontier(frontier_from_ids(local_frame(spark, ids, "id string")))
     stats = job.crawl()
 
     # A2 fold (Program.fs:143-151) computed RELATIONALLY: union the known set
     # with successfully crawled nums, dedup, top-50 desc — a TakeOrdered plan,
     # so exactly MAX_KNOWN_SET rows ever reach the driver (the cards table may
     # be billions of rows; collecting it would be a driver OOM at scale).
-    known_df = spark.createDataFrame(
-        [(int(n),) for n in known_nums], "num long"
-    )
+    known_df = local_frame(spark, [(int(n),) for n in known_nums], "num long")
     top = (
         job.cards()
         .where(F.col("error").isNull())

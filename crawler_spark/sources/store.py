@@ -35,6 +35,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .local import local_frame
+
 
 class SnapshotStore:
     def __init__(self, root: str):
@@ -175,8 +177,13 @@ class SnapshotStore:
 
     def read_or_empty(self, spark: SparkSession, table: str, schema: str,
                       as_of: int | None = None) -> DataFrame:
+        """:meth:`read` under ``schema``; a table with no snapshot (at
+        ``as_of``) reads as an empty ``LocalRelation`` of that schema
+        (:func:`~crawler_spark.sources.local.local_frame`), which the
+        optimizer propagates through the joins and projections above it:
+        they plan as ``LocalTableScan <empty>`` and run no task."""
         df = self.read(spark, table, as_of=as_of, schema=schema)
-        return df if df is not None else spark.createDataFrame([], schema)
+        return df if df is not None else local_frame(spark, [], schema)
 
     # -- maintenance --------------------------------------------------------
     def compact(self, spark: SparkSession, table: str,

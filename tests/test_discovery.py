@@ -139,3 +139,35 @@ def test_newcards_cycle_end_to_end(spark, docs, discovery_pages,
     assert stats and stats[0]["fetched"] == len(expected_new)
     # known set: union folded, desc, truncated (A2)
     assert new_known == set(sorted(known | expected_new, reverse=True)[:MAX_KNOWN_SET])
+
+
+# Spark jobs of the poll below at the commit before discovery's new ids were
+# collected once per poll: the check-API probe join ran three times (the
+# isEmpty test, frontier_from_ids' max, the enqueue commit)
+PARENT_POLL_JOBS = 51
+
+
+def test_newcards_poll_job_ceiling(spark, docs, discovery_pages,
+                                   existing_nums, tmp_path):
+    """One newcards poll (discover, enqueue, two-wave crawl, known-set
+    fold) runs the check-API probe join once: at most 46 Spark jobs (44 on
+    8 local cores)."""
+    from crawler_spark.plans.crawl_job import CrawlJob
+    from crawler_spark.plans.discovery import newcards_cycle
+    from crawler_spark.sources.pages import build_pages
+
+    pages = build_pages(spark, "", include_fixtures=False, docs_df=docs)
+    pages = pages.unionByName(discovery_pages).cache()
+    pages.count()
+    nums_sorted = sorted(existing_nums)
+    known = set(nums_sorted[-25:-19])
+    job = CrawlJob(spark, str(tmp_path / "store"), pages,
+                   wave_seconds=3600 * 1000, prewarm=False)
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup() or [-1])
+    new_known, stats = newcards_cycle(job, known, lookahead=400)
+    n_jobs = max(tracker.getJobIdsForGroup()) - before
+    pages.unpersist()
+    assert len(stats) == 2
+    assert max(new_known) == max(existing_nums)
+    assert n_jobs <= 46 < PARENT_POLL_JOBS, n_jobs

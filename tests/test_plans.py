@@ -353,3 +353,53 @@ def test_politeness_conformance_sees_subsecond_hammering(spark):
     assert h["n_fetches"] == 2 and h["min_gap_s"] == 0.6
     assert h["n_violations"] == 1 and not h["compliant"]
     assert h["worst_deficit_s"] == 0.4
+
+
+def test_driver_rows_plan_as_local_relations(spark, tmp_path):
+    """Frames made from driver rows are Arrow-backed LocalRelations — no
+    PythonRDD scan (``LogicalRDD``) left in their optimized plans — and a
+    wave path with nothing downloaded (a photo wave's card path) optimizes
+    to an empty LocalRelation: no pages scan, no parse UDF."""
+    from crawler_spark.functions.parse_udfs import with_parsed_card
+    from crawler_spark.plans.crawl_job import FRONTIER_SCHEMA, CrawlJob
+    from crawler_spark.plans.discovery import _fetch_pages
+    from crawler_spark.sources.frontier import frontier_from_range
+    from crawler_spark.sources.local import local_frame
+    from crawler_spark.sources.pages import (
+        CHECK_API_URL,
+        NUM_BASE,
+        build_pages,
+        synthetic_checkapi_pages,
+        synthetic_docs_from_range,
+    )
+    from crawler_spark.sources.store import SnapshotStore
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    docs = synthetic_docs_from_range(spark, 100)
+    pages = build_pages(spark, "", include_fixtures=False, docs_df=docs)
+    rows = local_frame(spark, [(0, "a"), (1, None)], "wave int, s string")
+    frames = {
+        "rows": rows,
+        "no rows": local_frame(spark, [], "wave int, s string"),
+        "never committed": SnapshotStore(str(tmp_path / "store")).read_or_empty(
+            spark, "frontier", FRONTIER_SCHEMA),
+        "probe": _fetch_pages(
+            spark, synthetic_checkapi_pages(spark, "", docs),
+            [CHECK_API_URL % str(NUM_BASE // 10)]),
+    }
+    for name, df in frames.items():
+        plan = optimized(df)
+        assert "LocalRelation" in plan, (name, plan)
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, (name, plan)
+    assert rows.rdd.getNumPartitions() == 1
+    assert [tuple(r) for r in rows.collect()] == [(0, "a"), (1, None)]
+    assert frames["probe"].where(F.col("fetch_status") == "downloaded").count() == 1
+
+    job = CrawlJob(spark, str(tmp_path / "job"), pages, prewarm=False)
+    batch = frontier_from_range(spark, NUM_BASE, NUM_BASE + 9)
+    card_path = with_parsed_card(job._downloaded(batch, "card", 0, 20), "text")
+    plan = optimized(card_path)
+    assert plan.startswith("LocalRelation <empty>"), plan
+    assert card_path.collect() == []

@@ -87,3 +87,32 @@ def test_perfbench_traced_names_exist():
         if owner is None or not hasattr(owner, meth):
             missing.append(f"{module}.{cls}.{meth}")
     assert missing == []
+
+
+# modules whose frames from driver rows must be local relations
+# (crawler_spark.sources.local.local_frame), never list-fed PythonRDDs
+LOCAL_ROW_MODULES = sorted((ROOT / "crawler_spark" / "plans").glob("*.py")) + [
+    ROOT / "crawler_spark" / "sources" / "store.py"
+]
+
+
+def _list_fed_create_dataframe(path: Path):
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Call) and getattr(
+            node.func, "attr", None
+        ) == "createDataFrame":
+            data = node.args[:1] + [k.value for k in node.keywords
+                                    if k.arg == "data"]
+            if any(isinstance(d, (ast.List, ast.ListComp)) for d in data):
+                yield node.lineno
+
+
+@pytest.mark.parametrize("module", LOCAL_ROW_MODULES,
+                         ids=lambda p: f"{p.parent.name}/{p.name}")
+def test_driver_rows_enter_as_local_frames(module):
+    """No ``createDataFrame(`` call in ``crawler_spark/plans/`` or
+    ``sources/store.py`` takes a list display, a list comprehension or
+    ``[]``: classic PySpark runs such a frame through a Python worker on
+    every scan; ``local_frame`` makes it a LocalRelation."""
+    assert [f"{module.name}:{line}"
+            for line in _list_fed_create_dataframe(module)] == []
